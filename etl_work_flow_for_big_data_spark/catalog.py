@@ -289,11 +289,3 @@ def fan_out(df: DataFrame) -> DataFrame:
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load every fixture table; keys match the DuckDB oracle views."""
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view so users can
-    ``spark.sql`` against the catalog directly (the engine's full SQL
-    surface; same names the DuckDB oracle uses)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -65,17 +65,6 @@ def shingles(text: Column, k: int = 5) -> Column:
     return F.element_at(F.transform(F.array(tokens(text)), build), 1)
 
 
-def hash_hex(col: Column, prefix: str = "") -> Column:
-    """md5 hex of (prefix || col) — cross-engine deterministic."""
-    return F.md5(F.concat(F.lit(prefix), col)) if prefix else F.md5(col)
-
-
-def hash_int16(col: Column) -> Column:
-    """16-bit int from the first 4 md5 hex chars (DuckDB mirror:
-    ``CAST('0x' || substring(md5(x),1,4) AS INT)``)."""
-    return F.conv(F.substring(F.md5(col), 1, 4), 16, 10).cast("int")
-
-
 def round4_ratio(num: Column, den: Column) -> Column:
     """``round(num/den, 4)`` (HALF_UP) computed in exact integer
     arithmetic for integral ``num``/``den`` (``den > 0``).

@@ -208,11 +208,10 @@ def ngram_jaccard_pairs(
       scans the corpus exactly once; its per-partition sort spills
       rather than OOMs on hot shingles.
 
-      Re-measured r13 (BENCH_AB.json) after BENCH_r12 recorded
-      dedup_apply at 7.47 s: interleaved med-of-5 on this strategy
-      reads 1.89 s with the control at 0.93× its first record — the
-      committed r12 number was bench-host load, not a regression;
-      the strategy choice above stands.
+      Re-measured after one run recorded dedup_apply at 7.47 s:
+      interleaved med-of-5 on this strategy reads 1.89 s with the
+      control at 0.93× its first record — the outlier was bench-host
+      load, not a regression; the strategy choice above stands.
     - **unbounded (max_df=None)** — index self-join on shingle
       (sort-merge streams unbounded posting lists; an in-group
       explode would materialize a hot shingle's df² pairs in one
@@ -479,8 +478,8 @@ def connected_components(
     the exact transitive closure with a recursive CTE.
 
     ``stats``: pass a dict to receive ``{"rounds": r}`` — the number
-    of rewiring rounds actually run (the scale probe's O(log n)
-    evidence, scripts/cc_probe.py); zero driver-side cost otherwise.
+    of rewiring rounds actually run (the O(log n) convergence
+    evidence); zero driver-side cost otherwise.
     """
     if algorithm == "star":
         return _cc_two_phase(pairs, 30 if max_iters is None else max_iters,

@@ -668,8 +668,8 @@ def ivf_topk(
     through Spark's CacheManager (the subtree is identical — query ids
     don't feed it), so in-session re-runs measure amortized cost, same
     as every persisted intermediate here; a fresh process recomputes
-    from parquet. scripts/ivf_amortize.py clears the cache between its
-    one-shot batches to keep measuring true one-shot semantics. Deterministic end-to-end at
+    from parquet; clear the cache between runs to measure true
+    one-shot cost. Deterministic end-to-end at
     iters=0: ties in assignment break on centroid id, ranking on
     rounded cosine + candidate id.
     Returns (q_vec_id, rank, c_vec_id, cos_sim).

@@ -65,126 +65,10 @@ def _tuned(fn):
     return wrapped
 
 
-# Driver-check priority. The driver's per-round CORRECTNESS run caps at
-# 50 queries in registry-iteration order, so iteration order decides
-# which queries receive a hard oracle check. PROCESS RULE (adopted
-# after the r8 miss, VERDICT r8 "What's wrong" #1): this list is
-# re-audited against `git diff` as the LAST commit of every round —
-# any query whose engine OR oracle side changed after the list was
-# drafted moves to the front before the round closes.
-#
-# Round-13 rotation (steady state): leads with the round's
-# changed/new queries, then the exact 44-query rotation debt VERDICT
-# r12 next-round #1 prescribes: every query whose last hard driver
-# check was round 11 (CORRECTNESS_r11 minus CORRECTNESS_r12 —
-# `_PRIORITY_BASIS` pins that record pair so the guard test derives
-# the same set regardless of later snapshots landing on disk).
-# Named slots stay ≤50 so every listed query receives a driver check;
-# the round's NEW/CHANGED queries occupy the front. Every deferred
-# query is still oracle-checked at sf0.001 by
-# tests/test_oracle_parity.py and swept on adversarial + fuzz
-# fixtures every round. NEW/CHANGED queries must be added to the
-# front to receive a slot.
-#
-# ROUND-15 ROTATION, closing audit (VERDICT r14 next-round #1 + the
-# r8 process rule). Front block = every query whose ENGINE changed
-# since the r14 snapshot: (a) the five sim_ivf_* queries rewritten by
-# r14's argmax/one-shot/sidecar commits that never got a driver hash
-# check (VERDICT r14 "What's wrong" #1), and (b) the sixteen queries
-# whose operators gained the r15 input-layout-adaptive fan-out
-# (catalog.fan_out — ngram/minhash/ANN-dedup/decontaminate/multimodal
-# call sites, plus every pairwise_cosine consumer, whose kernel path
-# changed even where the |corpus|×dim gate no-ops at fixture scale).
-# Then the rotation debt (CORRECTNESS_r13 minus CORRECTNESS_r14,
-# pinned by _PRIORITY_BASIS) minus debt members already in the changed
-# block: 21 changed + 29 debt = 50 exactly; the six overflowed debt
-# names are declared in _DEBT_CARRY (all untouched for ≥2 rounds,
-# r13-hash-green, oracle-checked at sf0.001 every pytest run) and must
-# lead round 16's debt block.
-_CHECK_PRIORITY = [
-    # -- engine changed in r14, never driver-checked (VERDICT r14 #1)
-    "sim_ivf_topk",  # one-shot corpus pass + argmax + gated kernel fan-out
-    "sim_ivf_nprobe",
-    "sim_ivf_persisted",
-    "sim_ivf_persisted_nprobe",
-    "sim_ivf_trained",
-    # -- engine changed in r15 (fan-out call sites; OPTIMIZATION_r15.md)
-    "dedup_minhash",
-    "dedup_ngram",
-    "dedup_apply",
-    "dedup_components",
-    "llm_clean_corpus",
-    "decontaminate",
-    "dedup_embedding_ann",
-    "dedup_embedding_ann_h1",
-    "mm_decode",
-    "mm_features",
-    "mm_frames",
-    "mm_resize",
-    "sim_pairs",
-    "sim_topk",
-    "sim_topk_quantized",
-    "dedup_embedding",
-    # -- rotation debt: last hard driver check round 13
-    "agg_conditional",
-    "agg_cube",
-    "agg_distinct",
-    "agg_groupby",
-    "agg_grouping_sets",
-    "agg_pivot",
-    "agg_rollup",
-    "agg_stats",
-    "agg_unpivot",
-    "dq_validate",
-    "join_anti",
-    "join_left",
-    "join_range",
-    "join_salted",
-    "join_semi",
-    "join_star",
-    "mix_weighted",
-    "profile_columns",
-    "sample_quota",
-    "sim_ann_lsh",
-    "sim_ann_multiprobe",
-    "split_assign",
-    "subquery_exists",
-    "subquery_scalar",
-    "text_repetition",
-    "text_scrub",
-    "text_token_regex",
-    "text_tokens",
-    "tpch_q10_returned_items",
-]
-
-# The CORRECTNESS record pair (round numbers) the rotation-debt block
-# above was derived from: debt == set(CORRECTNESS_r{lo}) -
-# set(CORRECTNESS_r{hi}). tests/test_registry_order.py keys its
-# derivation to THIS pair — not "the two newest records on disk" — so
-# the driver committing the next round's snapshot cannot invalidate a
-# priority list that was correct when written (ADVICE r12 #1). Bump
-# alongside every _CHECK_PRIORITY rewrite at round open.
-_PRIORITY_BASIS = (13, 14)
-
-# r15 closing audit: 21 changed + 29 debt = exactly 50; these six
-# debt names overflow the driver window and MUST lead round 16's debt
-# block. All are untouched for >= 2 rounds, r13-hash-green, and
-# oracle-checked at sf0.001 by tests/test_oracle_parity.py every
-# pytest run.
-_DEBT_CARRY: list[str] = [
-    "tpch_q18_large_orders",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "ts_gapfill",
-    "window_rank",
-]
-
-
 def load_all() -> dict[str, QuerySpec]:
-    """Import every query module (side effect: registry population),
-    then order the registry by driver-check priority (see
-    ``_CHECK_PRIORITY``)."""
+    """Import every query module (side effect: registry population) and
+    return the registry in import order; callers look queries up by
+    name."""
     from etl_work_flow_for_big_data_spark.queries import (  # noqa: F401
         multimodal,
         packets,
@@ -194,8 +78,4 @@ def load_all() -> dict[str, QuerySpec]:
         windows,
     )
 
-    rank = {name: i for i, name in enumerate(_CHECK_PRIORITY)}
-    insertion = {name: i for i, name in enumerate(REGISTRY)}
-    back = len(_CHECK_PRIORITY)  # unlisted (r6-green) queries keep order, at the back
-    ordered = sorted(REGISTRY, key=lambda n: (rank.get(n, back), insertion[n]))
-    return {name: REGISTRY[name] for name in ordered}
+    return REGISTRY

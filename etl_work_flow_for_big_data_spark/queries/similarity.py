@@ -691,7 +691,7 @@ def sim_ivf_persisted_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dependent centroid values — so the trained build+serve path is "
     "hash-checkable against the brute-force oracle; the recall-vs-"
     "iters curve at small nprobe is measured separately "
-    "(scripts/ann_recall_probe.py, SCALE.md ANN table).",
+    "(SCALE.md ANN table).",
 )
 def sim_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_work_flow_for_big_data_spark.functions.vectors import is_valid_embedding

@@ -7,22 +7,12 @@ packet routed to its key (``/root/reference/MFramework.cpp:749-773``,
 state is keyed, checkpointed (survives restarts — the FWorkCheckpoint
 analog), and fed Arrow batches per key per micro-batch.
 
-Two generations of that API exist and both are supported here:
-
-- ``transformWithStateInPandas`` (Spark 4.x, the default when the
-  runtime can run it — see ``tws_available``; its Python state
-  server additionally needs the ``protobuf`` package): a
-  ``StatefulProcessor`` with named, typed state primitives
-  (ValueState here; ListState/MapState/timers available), schema
-  evolution, and a RocksDB-backed state store — the 100-TB path,
-  since RocksDB spills keyed state to disk instead of pinning it in
-  executor heap like the HDFS-backed default.
-- ``applyInPandasWithState`` (Spark 3.4+): the older function-based
-  form, kept as the automatic fallback on runtimes without the new
-  API, and directly selectable for checkpoint compatibility with
-  queries started under it (state formats are NOT interchangeable
-  between the two APIs — resuming an existing checkpoint must keep
-  the engine it was started with).
+The engine uses ``applyInPandasWithState`` (Spark 3.4+), the
+function-based form that runs on every supported runtime. Its state
+lives in whichever store ``spark.sql.streaming.stateStore.providerClass``
+names; setting it to the RocksDB provider at deployment spills keyed
+state to disk instead of pinning it in executor heap like the
+HDFS-backed default.
 
 State values stay constant-size per key (counters/aggregates, never
 row buffers) so the state store is O(keys) regardless of stream
@@ -36,173 +26,29 @@ from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 RUNNING_TOTALS_STATE = "total_events long, total_value double"
-
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-# Spark's built-in default provider: the only value the tws path may
-# silently replace with RocksDB. An explicitly-set third provider is
-# the user's choice — respected, and Spark surfaces its own error if
-# transformWithState rejects it.
-_HDFS_DEFAULT_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-)
-
-try:  # Spark 4.x; on 3.x the module is absent and the tws path is gated
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    _HAS_TWS_MODULE = True
-except ImportError:  # pragma: no cover — this repo pins pyspark 4.x
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    StatefulProcessorHandle = Any  # type: ignore[assignment,misc]
-    _HAS_TWS_MODULE = False
-
-
-class RunningTotalsProcessor(StatefulProcessor):
-    """transformWithState processor for ``running_totals_per_key``:
-    one ValueState holding (total_events, total_value) per key.
-
-    Module-level (not a closure inside ``_totals_tws``) so its
-    accumulate/round semantics are unit-testable with a stub handle
-    even where protobuf — required only to EXECUTE the streaming query
-    — is unavailable (``tests/test_streaming.py``)."""
-
-    def __init__(self, key: str, value_col: str) -> None:
-        self._key = key
-        self._value_col = value_col
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._totals = handle.getValueState("totals", RUNNING_TOTALS_STATE)
-
-    def handleInputRows(
-        self, k: tuple[Any, ...], rows: Iterator[pd.DataFrame], timer_values
-    ) -> Iterator[pd.DataFrame]:
-        prior = self._totals.get() if self._totals.exists() else (0, 0.0)
-        total_events, total_value = int(prior[0]), float(prior[1])
-        batch_events = 0
-        for pdf in rows:
-            batch_events += len(pdf)
-            total_events += len(pdf)
-            total_value += float(pdf[self._value_col].sum())
-        total_value = round(total_value, 6)
-        self._totals.update((total_events, total_value))
-        yield pd.DataFrame(
-            {
-                self._key: [k[0]],
-                "batch_events": [batch_events],
-                "total_events": [total_events],
-                "total_value": [total_value],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def tws_available() -> bool:
-    """True when the runtime can actually execute
-    ``transformWithStateInPandas``: the API must exist (Spark 4.x)
-    AND the ``protobuf`` package must be importable — the API's
-    Python state server speaks protobuf to the JVM state store, and
-    without it the driver worker crashes at query start with an
-    opaque STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE rather
-    than a clean error."""
-    from pyspark.sql import GroupedData
-
-    if not hasattr(GroupedData, "transformWithStateInPandas"):
-        return False
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        return False
-    return True
 
 
 def running_totals_per_key(
     stream: DataFrame,
     key: str = "user_id",
     value_col: str = "value",
-    engine: str = "auto",
 ) -> DataFrame:
     """Cumulative per-key event count + ``value_col`` sum, emitted once
     per key per micro-batch. State = two scalars per key;
     checkpoint-durable (counts continue across query restarts).
 
-    ``engine``: ``"auto"`` (transformWithState when the runtime has
-    it, else the legacy API), ``"tws"``, or ``"applyinpandas"`` (for
-    resuming checkpoints created under the legacy API).
-
     Output columns: ``<key>, batch_events, total_events, total_value``.
     """
     if value_col not in stream.columns:
         raise ValueError(f"value_col {value_col!r} not in stream columns")
-    if engine not in ("auto", "tws", "applyinpandas"):
-        raise ValueError(f"engine must be auto|tws|applyinpandas, got {engine!r}")
     key_type = stream.schema[key].dataType.simpleString()
     output_schema = (
         f"{key} {key_type}, batch_events long, total_events long, "
         "total_value double"
     )
-    use_tws = engine == "tws" or (engine == "auto" and tws_available())
-    if use_tws:
-        return _totals_tws(stream, key, value_col, output_schema)
-    return _totals_legacy(stream, key, value_col, output_schema)
-
-
-def _totals_tws(
-    stream: DataFrame, key: str, value_col: str, output_schema: str
-) -> DataFrame:
-    from pyspark.sql import GroupedData
-
-    # Both capability gates fail at BUILD time with a clear message —
-    # an explicit engine='tws' must never fall through to a raw
-    # AttributeError (Spark 3.x) or an opaque
-    # STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE at query start
-    # (protobuf absent).
-    if not _HAS_TWS_MODULE or not hasattr(GroupedData, "transformWithStateInPandas"):
-        raise RuntimeError(
-            "transformWithStateInPandas requires Spark 4.x (the API is "
-            "absent on this runtime); use engine='applyinpandas'"
-        )
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise ImportError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(its Python state server speaks protobuf to the JVM); "
-            "install protobuf or use engine='applyinpandas'"
-        ) from exc
-
-    # transformWithState requires the RocksDB state store provider;
-    # the HDFS-backed DEFAULT errors at query start, so only the
-    # unset/default conf is auto-upgraded to RocksDB. Any explicitly
-    # user-set provider — RocksDB-derived or otherwise — is respected
-    # as-is; if transformWithState rejects it, Spark's own error names
-    # the conf, which beats silently overriding a deliberate choice
-    # (the override is session-global and would also flip providers
-    # under unrelated queries started later in the session).
-    spark = stream.sparkSession
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    current = spark.conf.get(conf_key, "")
-    if current in ("", _HDFS_DEFAULT_PROVIDER):
-        spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
-    return stream.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=RunningTotalsProcessor(key, value_col),
-        outputStructType=output_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def _totals_legacy(
-    stream: DataFrame, key: str, value_col: str, output_schema: str
-) -> DataFrame:
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def fn(
         k: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState

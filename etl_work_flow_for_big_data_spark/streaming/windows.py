@@ -38,46 +38,6 @@ def tumbling_agg(
     )
 
 
-def sliding_agg(
-    df: DataFrame,
-    ts_col: str = "ts",
-    window: str = "2 hours",
-    slide: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Sliding event-time window (each event lands in window/slide
-    overlapping windows); state bounded by the watermark like
-    tumbling_agg. Batch twin: the oracled ``window_sliding`` query."""
-    return (
-        df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "n_events")
-    )
-
-
-def session_agg(
-    df: DataFrame,
-    ts_col: str = "ts",
-    key: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Session windows (gap-based); state = one open session per key,
-    merged on arrival — the scalable sessionization."""
-    return (
-        df.withWatermark(ts_col, watermark)
-        .groupBy(key, F.session_window(ts_col, gap).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            key,
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
 def dedup_within_watermark(
     df: DataFrame,
     keys: list[str],
@@ -107,8 +67,8 @@ def near_dedup_within_watermark(
 
     Scale contract: state is one row per DISTINCT key inside the
     horizon (bounded by watermark × ingest rate, invariant in stream
-    length — the measured dedup-pipeline contract in
-    BENCH_STREAM.json), and each key is a constant-size int, so state
+    length — measured on the streaming dedup pipeline), and each key
+    is a constant-size int, so state
     bytes don't scale with document length.
 
     ``mode="exact"`` (default): one 16-bit fingerprint key, matching
@@ -136,7 +96,7 @@ def near_dedup_within_watermark(
     State: one int row per DISTINCT high band in the horizon plus one
     per distinct low band among high-band-fresh docs — ≤2 rows per
     distinct-content doc in the horizon, the ×2 bound (measured, with
-    the per-band split, in BENCH_STREAM's dedup_h1 pipeline). Cost
+    the per-band split, on the banded dedup stream). Cost
     note: each chained stage adds a shuffle + one state-store instance
     PER SHUFFLE PARTITION whose commit cost is per-batch fixed —
     size ``spark.sql.shuffle.partitions`` to the ingest rate

@@ -183,8 +183,7 @@ def main() -> None:
             times = []
             for _ in range(3):
                 t0 = time.time()
-                # same action as bench.py: full materialization, no
-                # driver-side row transfer
+                # full materialization, no driver-side row transfer
                 spec.fn(spark, dirs[k]).write.mode("overwrite").format("noop").save()
                 times.append(time.time() - t0)
             results[name][str(k)] = round(sorted(times)[1], 3)

@@ -150,31 +150,64 @@ def test_against_fixture_pairs(spark, sf_dir):
     assert labels == _union_find_truth(pair_rows)
 
 
+def _broom_edges(n, rng):
+    """Chain over 50% of nodes, star fan of 40% rooted at the chain's
+    middle, isolated pairs over the rest — ids globally shuffled so
+    no labeling shortcut follows from id locality."""
+    ids = list(range(n))
+    rng.shuffle(ids)
+    n_chain = n // 2
+    edges = [(ids[i - 1], ids[i]) for i in range(1, n_chain)]
+    center = ids[n_chain // 2]
+    n_star = int(n * 0.4)
+    edges += [(center, ids[j]) for j in range(n_chain, n_chain + n_star)]
+    rest = ids[n_chain + n_star:]
+    edges += list(zip(rest[::2], rest[1::2]))
+    return edges
+
+
+def test_union_find_truth_labels_are_component_min_ids():
+    """The ground truth labels every node with its component's
+    smallest id, whatever the edge direction or order."""
+    edges = [(9, 3), (5, 9), (8, 7), (4, 4), (12, 8)]
+    assert _union_find_truth(edges) == {
+        3: 3, 5: 3, 9: 3, 7: 7, 8: 7, 12: 7, 4: 4,
+    }
+
+
+def test_broom_edges_shape():
+    """The broom fixture is what the round-count test assumes: one
+    component of chain + star (90% of the nodes) plus isolated pairs,
+    the same graph for the same seed."""
+    import random
+
+    n = 2_001
+    edges = _broom_edges(n, random.Random(7))
+    assert edges == _broom_edges(n, random.Random(7))
+    n_chain, n_star = n // 2, int(n * 0.4)
+    n_pairs = (n - n_chain - n_star) // 2
+    assert len(edges) == (n_chain - 1) + n_star + n_pairs
+    labels = _union_find_truth(edges)
+    sizes: dict = {}
+    for root in labels.values():
+        sizes[root] = sizes.get(root, 0) + 1
+    assert sorted(sizes.values(), reverse=True) == [n_chain + n_star] + [2] * n_pairs
+
+
 def test_broom_graph_rounds_stay_logarithmic(spark):
     """The star-CC worst case at test scale: a shuffled-id chain
     (diameter = n/2 — min-label locality useless) whose middle node
     also roots a star fan of 40% of the nodes (the skew funnel), plus
-    isolated pairs — the scripts/cc_probe.py shape. Pins that the
-    round count stays ~log n (the 100-TB convergence claim; label
-    propagation would need ~n/2 rounds here) and that fast
-    convergence is convergence to the TRUE labels."""
+    isolated pairs. Pins that the round count stays ~log n (the
+    100-TB convergence claim; label propagation would need ~n/2
+    rounds here) and that fast convergence is convergence to the TRUE
+    labels."""
     import math
     import random
-    import sys
-    import os
-
-    sys.path.insert(
-        0,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "scripts",
-        ),
-    )
-    from cc_probe import broom_edges, union_find
 
     n = 20_000
-    edges = broom_edges(n, random.Random(4242))
+    edges = _broom_edges(n, random.Random(4242))
     stats: dict = {}
     got = _cc(spark, edges, stats=stats)
-    assert got == union_find(edges)
+    assert got == _union_find_truth(edges)
     assert stats["rounds"] <= 2 * math.log2(n) + 4, stats

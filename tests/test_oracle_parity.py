@@ -18,6 +18,7 @@ def test_every_query_is_hash_oracled():
     assert all(
         isinstance(s.oracle, str) and s.oracle.strip() for s in REGISTRY.values()
     )
+    assert len(REGISTRY) >= 83
 
 
 @pytest.mark.parametrize("name", ORACLE_KEYS)

@@ -1,136 +1,9 @@
-"""Registry iteration-order contract.
+"""Registry contract: ``load_all()`` returns the complete registry, in
+import order, with one callable per name. Callers (``__spark_entry__``,
+``perfbench``, the scripts) look queries up by name, so the order is
+the plain insertion order of the ``@query`` decorators."""
 
-The driver's per-round CORRECTNESS run caps at 50 queries in
-registry-iteration order, so ordering is load-bearing: the round's
-red/changed queries plus the stalest-checked set must appear within the
-first 50 slots of ``load_all()``. See queries/__init__.py
-``_CHECK_PRIORITY``.
-"""
-
-import json
-import os
-
-from etl_work_flow_for_big_data_spark.queries import (
-    _CHECK_PRIORITY,
-    _DEBT_CARRY,
-    _PRIORITY_BASIS,
-    load_all,
-)
-
-# Round-15 changed set (manual — matches the closing audit in
-# queries/__init__.py): the five sim_ivf_* queries whose engine was
-# rewritten by the r14 optimization commits but never driver-checked
-# (VERDICT r14 "What's wrong" #1), plus the sixteen queries whose
-# operators gained the r15 input-layout-adaptive fan-out
-# (catalog.fan_out call sites + every pairwise_cosine consumer).
-CHANGED_THIS_ROUND = [
-    "sim_ivf_topk",
-    "sim_ivf_nprobe",
-    "sim_ivf_persisted",
-    "sim_ivf_persisted_nprobe",
-    "sim_ivf_trained",
-    "dedup_minhash",
-    "dedup_ngram",
-    "dedup_apply",
-    "dedup_components",
-    "llm_clean_corpus",
-    "decontaminate",
-    "dedup_embedding_ann",
-    "dedup_embedding_ann_h1",
-    "mm_decode",
-    "mm_features",
-    "mm_frames",
-    "mm_resize",
-    "sim_pairs",
-    "sim_topk",
-    "sim_topk_quantized",
-    "dedup_embedding",
-]
-
-DRIVER_WINDOW = 50
-
-
-def _stale_keys() -> list[str]:
-    """Rotation debt derived from the committed driver records: queries
-    hard-checked in round N-1 but not round N are exactly the debt the
-    next driver run must clear. The record pair is PINNED by
-    ``_PRIORITY_BASIS`` (the pair the priority list was written
-    against), not "the two newest on disk" — ADVICE r12 #1: deriving
-    from the newest records meant the driver committing the round-close
-    snapshot reddened this guard until the list was hand-rewritten.
-    The pair and the list now move together at round open."""
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    lo, hi = _PRIORITY_BASIS
-    try:
-        with open(os.path.join(root, f"CORRECTNESS_r{lo:02d}.json")) as f:
-            prev = set(json.load(f))
-        with open(os.path.join(root, f"CORRECTNESS_r{hi:02d}.json")) as f:
-            latest = set(json.load(f))
-    except FileNotFoundError:
-        return []
-    return sorted(prev - latest)
-
-
-def test_changed_queries_all_inside_the_50_slot_window():
-    """Changed queries MUST be inside the driver window; debt must be
-    too, unless changed+debt simply cannot fit — then the overflow is
-    bounded to exactly the unavoidable count AND pinned to the
-    explicitly-declared _DEBT_CARRY names (so the deferral is a
-    documented decision, not an accident), which must lead the next
-    round's debt block."""
-    names = list(load_all())
-    window = set(names[:DRIVER_WINDOW])
-    debt = _stale_keys()
-    missing_changed = [n for n in CHANGED_THIS_ROUND if n not in window]
-    assert not missing_changed, (
-        f"changed queries outside the driver window: {missing_changed}")
-    overflow_budget = max(0, len(CHANGED_THIS_ROUND) + len(debt) - DRIVER_WINDOW)
-    missing_debt = sorted(n for n in debt if n not in window)
-    assert len(missing_debt) <= overflow_budget, (
-        f"debt outside the window beyond the unavoidable overflow "
-        f"({overflow_budget}): {missing_debt}")
-    assert set(missing_debt) <= set(_DEBT_CARRY), (
-        f"window overflow {missing_debt} is not the declared "
-        f"_DEBT_CARRY {_DEBT_CARRY}")
-
-
-def test_changed_queries_lead_the_priority_list():
-    """NEW/CHANGED queries must occupy the FRONT slots (the process
-    rule): a changed query behind the rotation debt could fall out of
-    the 50-slot window when the debt grows."""
-    head = _CHECK_PRIORITY[: len(CHANGED_THIS_ROUND)]
-    assert sorted(head) == sorted(CHANGED_THIS_ROUND), head
-
-
-def test_priority_covers_the_pinned_debt():
-    """Every debt name from the pinned basis pair appears in
-    _CHECK_PRIORITY, except the declared carry-overs (which must
-    themselves be genuine debt members — carrying a non-debt name
-    would be meaningless)."""
-    listed = set(_CHECK_PRIORITY)
-    debt = set(_stale_keys())
-    missing = sorted(debt - listed - set(_DEBT_CARRY))
-    assert not missing, f"debt absent from _CHECK_PRIORITY: {missing}"
-    if debt:  # basis records present
-        stray = sorted(set(_DEBT_CARRY) - debt)
-        assert not stray, f"_DEBT_CARRY names are not debt: {stray}"
-
-
-def test_registry_order_follows_check_priority():
-    names = list(load_all())
-    listed = [n for n in names if n in set(_CHECK_PRIORITY)]
-    expected = [n for n in _CHECK_PRIORITY if n in set(names)]
-    assert listed == expected
-
-
-def test_priority_names_all_registered():
-    names = set(load_all())
-    unknown = [n for n in _CHECK_PRIORITY if n not in names]
-    assert not unknown, f"_CHECK_PRIORITY references unregistered queries: {unknown}"
-
-
-def test_priority_fits_driver_window():
-    assert len(_CHECK_PRIORITY) <= DRIVER_WINDOW, len(_CHECK_PRIORITY)
+from etl_work_flow_for_big_data_spark.queries import REGISTRY, load_all
 
 
 def test_every_query_has_callable_and_registry_is_complete():
@@ -138,3 +11,41 @@ def test_every_query_has_callable_and_registry_is_complete():
     assert len(reg) >= 83
     for spec in reg.values():
         assert callable(spec.fn)
+
+
+def test_load_all_returns_registry_in_import_order():
+    reg = load_all()
+    assert reg is REGISTRY
+    # each entry is keyed by its own name, so insertion order is the
+    # order the @query decorators ran in
+    assert [spec.name for spec in reg.values()] == list(reg)
+    # a second call re-sorts nothing and registers nothing twice
+    again = load_all()
+    assert list(again) == list(reg)
+    assert all(again[n] is reg[n] for n in reg)
+
+
+def test_entry_points_expose_every_query_in_registry_order():
+    import __spark_entry__ as e
+
+    names = list(load_all())
+    assert list(e.queries()) == names
+    assert list(e.oracle_sql()) == names
+
+
+def test_query_decorator_registers_a_wrapper_and_returns_the_fn():
+    from etl_work_flow_for_big_data_spark.queries import query
+
+    def probe_fn(spark, sf_dir):
+        """probe doc"""
+
+    name = "registry_probe_query"
+    try:
+        assert query(name, "SELECT 1", doc="d")(probe_fn) is probe_fn
+        spec = REGISTRY[name]
+        assert (spec.name, spec.oracle, spec.doc) == (name, "SELECT 1", "d")
+        assert spec.fn is not probe_fn
+        assert (spec.fn.__name__, spec.fn.__doc__) == ("probe_fn", "probe doc")
+        assert list(REGISTRY)[-1] == name
+    finally:
+        REGISTRY.pop(name, None)
