@@ -10,7 +10,7 @@ range-explosion, no skewed theta-join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -96,13 +96,14 @@ def range_join(
     """Join a fact to a (small) tier/tariff table on
     ``lo <= value < hi``.
 
-    Disjoint tiers (the tariff-table norm): collect the tier bounds at
-    plan time and compile a CASE-WHEN bucketing expression + broadcast
-    equi-join on the bucket key. That keeps the probe inside
+    Disjoint tiers (the tariff-table norm): collect the tier table at
+    plan time and compile a CASE-WHEN bucketing expression, then emit
+    each tier column as a CASE on the bucket index (literals cast to
+    the tier schema's types). No join at all: the probe stays inside
     whole-stage codegen — a BroadcastNestedLoopJoin with a range
     predicate evaluates row-at-a-time and measured ~10× slower on a
-    600k-row fact. Rows matching no tier are dropped (inner-join
-    semantics).
+    600k-row fact. Output is the fact's columns followed by the tier's.
+    Rows matching no tier are dropped (inner-join semantics).
 
     Overlapping tiers (``assume_disjoint=False``): fall back to the
     general non-equi BNLJ, still broadcasting the tier side.
@@ -133,15 +134,18 @@ def range_join(
             F.col(value_col) < F.lit(r[hi_col])
         )
         expr = F.when(hit, i) if expr is None else expr.when(hit, i)
-    bucket = expr.otherwise(F.lit(None))
-    spark = fact.sparkSession
-    tiers_keyed = spark.createDataFrame(
-        [(i, *r) for i, r in enumerate(rows)],
-        schema=f"__tier_idx int, {', '.join(f'{f.name} {f.dataType.simpleString()}' for f in tiers.schema)}",
-    )
+    bucket = F.col("__tier_idx")
+
+    def tier_value(j: int, field) -> Column:
+        out = None
+        for i, r in enumerate(rows):
+            v = F.lit(r[j]).cast(field.dataType)
+            out = F.when(bucket == i, v) if out is None else out.when(bucket == i, v)
+        return out.alias(field.name)
+
     return (
-        fact.withColumn("__tier_idx", bucket)
-        .filter(F.col("__tier_idx").isNotNull())
-        .join(F.broadcast(tiers_keyed), "__tier_idx")
+        fact.withColumn("__tier_idx", expr)
+        .filter(bucket.isNotNull())
+        .select("*", *(tier_value(j, f) for j, f in enumerate(tiers.schema.fields)))
         .drop("__tier_idx")
     )

@@ -28,14 +28,17 @@ def identity(df: DataFrame) -> DataFrame:
 @operator("parse_packets")
 def parse_packets(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """B1: wire text → attrs map + promoted well-known keys
-    (s/f/t/a, the reference's reserved keys)."""
+    (s/f/t/a, the reference's reserved keys). The map is built once,
+    behind a one-row generate that pushed-down filters cannot cross,
+    so a filter on a promoted key is a map lookup, not a re-parse. A
+    malformed ``s`` promotes to NULL, so ``filter_valid`` drops it."""
     m = packet_map(F.col(payload_col))
     return (
-        df.withColumn("attrs", m)
-        .withColumn("s", packet_get(F.col("attrs"), "s").cast("long"))
-        .withColumn("f", packet_get(F.col("attrs"), "f"))
-        .withColumn("t", packet_get(F.col("attrs"), "t"))
-        .withColumn("a", packet_get(F.col("attrs"), "a"))
+        df.select("*", F.inline(F.array(F.struct(m.alias("__attrs")))))
+        .withColumn("attrs", F.col("__attrs"))
+        .drop("__attrs")
+        .withColumn("s", packet_get(F.col("attrs"), "s").try_cast("long"))
+        .withColumns({k: packet_get(F.col("attrs"), k) for k in "fta"})
     )
 
 

@@ -98,7 +98,8 @@ def _payload(df: DataFrame) -> DataFrame:
     """,
     doc="B1 packet parse: k=v wire text → typed fields "
     "(MFramework.cpp:1234-1243; key = offset 0, '=' at offset 1, value "
-    "keeps further '='). Pure Catalyst split/filter/transform — codegens.",
+    "keeps further '='). Pure Catalyst: one entry regex read by two "
+    "regexp_extract_all — codegens, no higher-order functions.",
 )
 def parse_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _payload(load_table(spark, sf_dir, "events"))
@@ -166,11 +167,11 @@ def serialize_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(MFramework.cpp:1245-1250). The validity test runs against the "
     "wire frame (anchored rlike for a TERMINATED NUMERIC 's=' entry, "
     "matching packet_entries' terminated-entries contract and the "
-    "downstream long cast) rather than the parsed map: a filter on "
-    "the parsed-then-cast column gets pushed through the projection "
-    "by Catalyst and re-evaluates the ENTIRE kv-parse per row "
-    "(measured 2x at sf0.1); the wire-level predicate is cheap and "
-    "the parse then runs once, on survivors only.",
+    "downstream long cast) rather than the raw packet_map column: a "
+    "filter on it gets pushed through the projection by Catalyst and "
+    "re-evaluates the ENTIRE kv-parse per row (measured 2x at sf0.1; "
+    "parse_packets avoids this with a generate); the wire-level "
+    "predicate is cheap and the parse then runs once, on survivors.",
 )
 def filter_required(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _payload(load_table(spark, sf_dir, "events"))

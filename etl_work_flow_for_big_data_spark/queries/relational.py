@@ -286,13 +286,15 @@ def join_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY t.tier
     """,
     doc="C6 range/tier join — usage-tier tariff rating (gsmrating.sh:14 "
-    "domain). Tier table broadcast ⇒ map-side nested-loop over O(3) "
-    "rows; the fact never shuffles for the join.",
+    "domain). range_join compiles the O(3) tier rows into CASE "
+    "expressions: no join node, and the fact never shuffles for it.",
 )
 def join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import pandas as pd  # Arrow local relation: range_join collects it with no job
+
     li = load_table(spark, sf_dir, "lineitem")
     tiers = spark.createDataFrame(
-        [(0.0, 10.0, "T1", 0.05), (10.0, 25.0, "T2", 0.10), (25.0, 51.0, "T3", 0.20)],
+        pd.DataFrame([(0.0, 10.0, "T1", 0.05), (10.0, 25.0, "T2", 0.10), (25.0, 51.0, "T3", 0.20)]),
         "lo double, hi double, tier string, rate double",
     )
     return (
@@ -954,10 +956,12 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stands in for shipmode) — filtered aggregation over a fact join",
 )
 def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import pandas as pd  # Arrow local relation: range_join collects it with no job
+
     l = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     tiers = spark.createDataFrame(
-        [(0.0, 25.0, "SMALL"), (25.0, 51.0, "LARGE")],
+        pd.DataFrame([(0.0, 25.0, "SMALL"), (25.0, 51.0, "LARGE")]),
         "lo double, hi double, tier string",
     )
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")

@@ -1,7 +1,10 @@
 """range_join unit tests (C6): disjointness validation (ADVICE r1,
-joins.py) and overlapping-tier semantics via the BNLJ fallback."""
+joins.py), the join-free CASE path's output schema and rows, and
+overlapping-tier semantics via the BNLJ fallback."""
 
 from __future__ import annotations
+
+from decimal import Decimal
 
 import pytest
 
@@ -50,6 +53,33 @@ def test_disjoint_tiers_fast_path_ok(spark, fact):
         (r["id"], r["tier"]) for r in range_join(fact, tiers, "v").collect()
     )
     assert rows == [(1, "a"), (2, "b")]
+
+
+def test_disjoint_tiers_keep_schema_types_and_drop_unmatched(spark):
+    """The CASE path emits the fact's columns then the tier's, in
+    order and with the tier's types (int, decimal, string), carries a
+    NULL tier value through, drops fact rows no tier covers, and plans
+    no join at all."""
+    fact = spark.createDataFrame(
+        [(1, 5.0, "x"), (2, 15.0, "y"), (3, 25.0, "z"), (4, -1.0, "w"), (5, None, "v")],
+        "id long, v double, tag string",
+    )
+    tiers = spark.createDataFrame(
+        [(10.0, 20.0, 2, Decimal("0.10"), None), (0.0, 10.0, 1, Decimal("0.05"), "low")],
+        "lo double, hi double, rank int, rate decimal(10,2), name string",
+    )
+    out = range_join(fact, tiers, "v")
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("id", "bigint"), ("v", "double"), ("tag", "string"),
+        ("lo", "double"), ("hi", "double"), ("rank", "int"),
+        ("rate", "decimal(10,2)"), ("name", "string"),
+    ]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, 5.0, "x", 0.0, 10.0, 1, Decimal("0.05"), "low"),
+        (2, 15.0, "y", 10.0, 20.0, 2, Decimal("0.10"), None),
+    ]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan
 
 
 class TestMergeUpsert:

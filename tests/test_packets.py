@@ -206,3 +206,29 @@ def test_parser_matches_reference_find_loop(payload):
     fidelity as a property, not just on curated cases."""
     spark = _SPARK[0]
     assert _parse_one(spark, payload) == _reference_find_loop(payload)
+
+
+_WIDE_ALPHABET = string.ascii_lowercase + string.digits + "=|.\n \r\u0085\u2028\u00e9\U0001F600"
+#: payloads over the wide alphabet, assembled from short runs so that
+#: an ``x=`` right after a ``\r``/``\u0085``/``\u2028`` is common
+_WIDE_PAYLOAD = st.lists(
+    st.one_of(st.sampled_from(_WIDE_ALPHABET), st.text(alphabet=_WIDE_ALPHABET, max_size=6))
+    .flatmap(lambda run: st.sampled_from([run, run + "=", run + "\n"])),
+    max_size=12,
+).map("".join)
+
+
+@settings(max_examples=30, deadline=None)
+@given(st.lists(_WIDE_PAYLOAD, min_size=1, max_size=20))
+def test_packet_map_matches_reference_find_loop_last_wins(payloads):
+    """``packet_map`` is the reference find-loop collapsed last-wins,
+    also when values and keys hold the characters a regex could take
+    for line terminators (``\\r``, ``\\u0085``, ``\\u2028``) or
+    multi-byte and non-BMP code points: only ``\\n`` ends an entry.
+    Each example parses a batch of payloads in one job."""
+    df = _SPARK[0].createDataFrame([(i, p) for i, p in enumerate(payloads)], "i int, payload string")
+    rows = df.select("i", packet_map(F.col("payload")).alias("m")).collect()
+    got = {r["i"]: r["m"] for r in rows}
+    assert [got[i] for i in range(len(payloads))] == [
+        dict(_reference_find_loop(p)) for p in payloads
+    ]

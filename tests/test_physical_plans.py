@@ -74,11 +74,38 @@ def test_join_anti_semi_physical(spark, sf_dir):
 
 
 def test_join_range_stays_codegen(spark, sf_dir):
-    """Disjoint tier join compiles to CASE bucketing + broadcast
-    equi-join — no BroadcastNestedLoopJoin in the plan."""
+    """Disjoint tier join compiles to CASE bucketing, with each tier
+    column a CASE on the bucket index — no join operator of any kind
+    in the plan."""
     plan = _plan(spark, sf_dir, "join_range")
     assert "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastHashJoin" in plan
+    assert not re.search(r"Join|CartesianProduct", plan), plan
+
+
+def test_kv_parse_built_once_and_codegen(spark, tmp_path):
+    """kv_text → filter_valid → project parses each packet once: the
+    filter on ``s`` cannot be pushed below the generate that builds
+    the map, so it is a map lookup, not a second parse. The parse and
+    every Filter/Project run inside whole-stage codegen (``*(n)``)."""
+    from etl_work_flow_for_big_data_spark.operators.transforms import (
+        filter_valid,
+        project,
+    )
+    from etl_work_flow_for_big_data_spark.sources.registry import DEFAULT as SOURCES
+
+    (tmp_path / "in.cdr").write_text("s=1|t=a\nt=b\n")
+    df = project(
+        filter_valid(SOURCES.read(spark, "kv_text", str(tmp_path))),
+        columns=["s", "t", "attrs"],
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("map_from_arrays(") == 1, plan
+    assert "regexp_extract_all" in plan and "lambdafunction" not in plan, plan
+    ops = [ln.lstrip(" +-:") for ln in plan.splitlines()
+           if re.match(r"[ +\-:]*(\*\(\d+\) )?(Filter|Project|Generate) ", ln)]
+    assert len(ops) >= 3, plan
+    assert all(op.startswith("*(") for op in ops), plan
+    assert sorted(r["s"] for r in df.collect()) == [1]
 
 
 def test_mm_meta_prunes_binary_payload(spark, sf_dir):

@@ -239,6 +239,70 @@ def test_run_batch_pipeline_end_to_end(spark, tmp_path):
     assert (out_dir / "route=rating").exists()
 
 
+#: valid packets 1-3 among malformed ``s`` values (``abc``, empty,
+#: ``12x``) and a packet with no ``s`` at all
+_FAULTY_KV = (
+    "s=1|t=rating|v=100\n"
+    "s=abc|t=rating\n"
+    "s=|t=billing\n"
+    "s=12x|t=billing\n"
+    "t=orphan|v=5\n"
+    "s=2|t=billing|v=50\n"
+    "s=3|v=7\n"
+)
+_FAULTY_WANT = {"rating": [1], "billing": [2], "dead-letter": [3]}
+
+
+def _by_route(rows) -> dict:
+    out: dict = {}
+    for r in rows:
+        out.setdefault(r["route"], []).append(r["s"])
+    return {k: sorted(v) for k, v in out.items()}
+
+
+def test_malformed_s_is_dropped_not_fatal(spark, tmp_path):
+    """Under ANSI casts a malformed ``s`` (non-numeric, empty, numeric
+    prefix) must not abort the pipeline: it promotes to NULL and
+    ``filter_valid`` drops it like a missing ``s``, in the batch
+    pipeline and in the routed stream alike."""
+    from etl_work_flow_for_big_data_spark.plans.runner import (
+        IOBinding,
+        run_batch_pipeline,
+    )
+    from etl_work_flow_for_big_data_spark.sources.registry import DEFAULT as SOURCES
+    from etl_work_flow_for_big_data_spark.streaming.sinks import start_routed_stream
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "in.cdr").write_text(_FAULTY_KV)
+    spec = PipelineSpec.from_rows(
+        "mediation",
+        [
+            {"session_id": 1, "operator_name": "filter_valid",
+             "params": {"required": "s"}, "next_session_id": 2},
+            {"session_id": 2, "operator_name": "route_by",
+             "params": {"key": "t"}, "next_session_id": 3},
+            {"session_id": 3, "operator_name": "project",
+             "params": {"columns": ["s", "route"]},
+             "next_component_type": "rating"},
+        ],
+    )
+    batch_out = tmp_path / "batch"
+    run_batch_pipeline(
+        spark, spec, IOBinding("kv_text", str(landing)), IOBinding("parquet", str(batch_out))
+    )
+    assert _by_route(spark.read.parquet(str(batch_out)).collect()) == _FAULTY_WANT
+
+    stream = SOURCES.read_stream(spark, "kv_text", str(landing), None)
+    stream_out = tmp_path / "stream"
+    query = start_routed_stream(
+        spec.compile(stream), str(stream_out), str(tmp_path / "ckpt")
+    )
+    assert query.awaitTermination(120)
+    assert query.exception() is None
+    assert _by_route(spark.read.parquet(str(stream_out)).collect()) == _FAULTY_WANT
+
+
 def test_profile_columns_plan_shape_and_approx(spark):
     """Per-column branches stay free of the multi-distinct EXPAND in
     BOTH modes (the unpivot-union splits the aggregate per column,
