@@ -278,8 +278,11 @@ def fan_out(df: DataFrame) -> DataFrame:
     Results are row-identical: every consumer is set-semantic, and a
     keyless repartition is retry-safe (local sort before round-robin,
     SPARK-23207). The partition probe plans ``df`` once — cheap for
-    the scan-shaped frames this wraps.
+    the scan-shaped frames this wraps. A streaming frame has no RDD to
+    probe (each micro-batch is planned anew) and passes through as is.
     """
+    if df.isStreaming:
+        return df
     n = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n)

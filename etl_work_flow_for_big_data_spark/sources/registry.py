@@ -125,7 +125,7 @@ def _read_kv_text(spark: SparkSession, path: str, **opts: Any) -> DataFrame:
     """Wire-packet files: one packet per line (entries separated by the
     substitute char ``sep`` since raw packets are multi-line), parsed
     to attrs + promoted keys via the parse_packets operator."""
-    sep = opts.pop("sep", "|")
+    sep = _check_sep(opts.pop("sep", "|"))
     from etl_work_flow_for_big_data_spark.operators.transforms import parse_packets
 
     raw = spark.read.options(**opts).text(path)
@@ -133,16 +133,22 @@ def _read_kv_text(spark: SparkSession, path: str, **opts: Any) -> DataFrame:
     return parse_packets(df)
 
 
-def _line_payload(sep: str):
+def _check_sep(sep: str) -> str:
+    if len(sep) != 1:  # the wire swaps sep and "\n" one for one
+        raise ValueError(f"sep must be exactly one character, got {sep!r}")
+    return sep
+
+
+def _line_payload(sep: str, text="value"):
     """One packet per file line: the line terminator the text reader
     stripped WAS the final entry's terminator, so restore it — the
     parser (packet_entries) consumes only terminated entries, exactly
     like the reference's find-loop (MFramework.cpp:1234-1243)."""
-    return F.concat(F.translate("value", sep, "\n"), F.lit("\n")).alias("payload")
+    return F.concat(F.replace(text, F.lit(sep), F.lit("\n")), F.lit("\n")).alias("payload")
 
 
 def _read_kv_text_stream(spark: SparkSession, path: str, schema, **opts: Any) -> DataFrame:
-    sep = opts.pop("sep", "|")
+    sep = _check_sep(opts.pop("sep", "|"))
     from etl_work_flow_for_big_data_spark.operators.transforms import parse_packets
 
     raw = spark.readStream.options(**opts).text(path)
@@ -179,9 +185,10 @@ def write_kv_text(df: DataFrame, path: str, attrs_col: str = "attrs", sep: str =
     separator substituted with ``sep``."""
     from etl_work_flow_for_big_data_spark.functions.packets import serialize_map
 
+    _check_sep(sep)
     wire = serialize_map(F.col(attrs_col))
     # neither the separator NOR a raw newline may occur inside any
-    # value — after translate() both are indistinguishable from entry
+    # value — after the swap both are indistinguishable from entry
     # boundaries and the round-trip would silently split the value
     # into bogus entries. Fail loudly, IN-ROW, inside the same write
     # pass (a filter+count pre-scan would double the full scan at
@@ -206,7 +213,7 @@ def write_kv_text(df: DataFrame, path: str, attrs_col: str = "attrs", sep: str =
                 wire,
             )
         ).cast("string"),
-    ).otherwise(F.translate(wire, "\n", sep))
+    ).otherwise(F.replace(wire, F.lit("\n"), F.lit(sep)))
     out = df.select(guarded.alias("value"))
     out.write.mode("overwrite").text(path)
 
@@ -263,10 +270,9 @@ def kafka_packets(df: DataFrame, sep: str | None = None) -> DataFrame:
     from etl_work_flow_for_big_data_spark.operators.transforms import parse_packets
 
     text = F.col("value").cast("string")
-    if sep is not None:
-        text = F.concat(F.translate(text, sep, "\n"), F.lit("\n"))
+    payload = text.alias("payload") if sep is None else _line_payload(_check_sep(sep), text)
     keep = [c for c in ("topic", "partition", "offset", "timestamp") if c in df.columns]
-    return parse_packets(df.select(text.alias("payload"), *keep))
+    return parse_packets(df.select(payload, *keep))
 
 
 def kafka_wire_frame(

@@ -13,6 +13,8 @@ appending duplicates — the ledger is the directory name).
 
 from __future__ import annotations
 
+import os
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -36,6 +38,13 @@ def route_fanout_writer(
     return write
 
 
+# A new routed-stream checkpoint's state partitions: streams get no AQE
+# coalescing, and each partition pays a store commit and one file per
+# route every batch; 1 measured best at ~10k rows per trigger.
+_STATE_PARTITIONS = "1"
+_START_LOCK = threading.Lock()  # orders the conf set/restore below
+
+
 def start_routed_stream(
     df: DataFrame,
     base_dir: str,
@@ -46,11 +55,26 @@ def start_routed_stream(
 ):
     """Start a streaming query that fans out by route with checkpointed
     exactly-once semantics (G2: checkpointLocation is the offset ledger,
-    the per-batch overwrite is the output ledger)."""
+    the per-batch overwrite is the output ledger). A new checkpoint
+    gets ``_STATE_PARTITIONS`` state partitions: the session conf is set
+    only around ``start()``, so do not start one while other work runs
+    on the same session."""
     writer = (
         df.writeStream.foreachBatch(route_fanout_writer(base_dir, route_col, fmt))
         .option("checkpointLocation", checkpoint_dir)
     )
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    log = os.path.join(checkpoint_dir, "offsets")
+    if os.path.isdir(log) and any(n.isdigit() for n in os.listdir(log)):
+        return writer.start()  # resumed: its offset log fixes the count
+    conf = df.sparkSession.conf
+    key = "spark.sql.shuffle.partitions"
+    with _START_LOCK:
+        caller_value = conf.get(key)
+        conf.set(key, _STATE_PARTITIONS)
+        try:
+            return writer.start()
+        finally:
+            if conf.get(key) == _STATE_PARTITIONS:  # not reset by anyone else
+                conf.set(key, caller_value)

@@ -98,9 +98,10 @@ def near_dedup_within_watermark(
     distinct-content doc in the horizon, the ×2 bound (measured, with
     the per-band split, on the banded dedup stream). Cost
     note: each chained stage adds a shuffle + one state-store instance
-    PER SHUFFLE PARTITION whose commit cost is per-batch fixed —
-    size ``spark.sql.shuffle.partitions`` to the ingest rate
-    (measured: the banded gate at 2.5k-row batches runs p50 815 ms at
+    PER STATE PARTITION whose commit cost is per-batch fixed — set at
+    checkpoint creation from ``spark.sql.shuffle.partitions`` (1 under
+    ``start_routed_stream``), so size it to the ingest rate (measured:
+    the banded gate at 2.5k-row batches runs p50 815 ms at
     8 partitions vs 1.5 s at 32; the exact gate 490 ms at 8)."""
     # same contract as salted_join's __salt: the working columns are
     # internal, and silently overwriting a caller's column of the same

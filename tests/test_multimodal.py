@@ -166,6 +166,30 @@ def _jpeg(w: int, h: int) -> bytes:
     return b"\xff\xd8" + app0 + sof0
 
 
+def test_decode_media_on_a_stream(spark, tmp_path):
+    """``fan_out`` passes a streaming frame through (it has no RDD to
+    probe), so the multimodal kernels run inside a streaming query."""
+    from etl_work_flow_for_big_data_spark.sources.registry import DEFAULT as SOURCES
+
+    schema = "doc_id long, content binary"
+    src = str(tmp_path / "media")
+    spark.createDataFrame([(1, _png(640, 480)), (2, _gif(3, 2))], schema).write.parquet(src)
+    got = []
+    q = (
+        decode_media(SOURCES.read_stream(spark, "parquet", src, schema), "doc_id")
+        .writeStream.foreachBatch(lambda batch, _: got.extend(batch.collect()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert {r["id"]: (r["format"], r["width"], r["height"]) for r in got} == {
+        1: ("png", 640, 480),
+        2: ("gif", 3, 2),
+    }
+
+
 def test_decode_media_parses_headers(spark):
     from etl_work_flow_for_big_data_spark.multimodal.columns import HEADER_FORMATS
 

@@ -6,8 +6,15 @@ from __future__ import annotations
 import os
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
-from etl_work_flow_for_big_data_spark.sources.registry import DEFAULT
+from etl_work_flow_for_big_data_spark.sources.registry import (
+    DEFAULT,
+    kafka_packets,
+    write_kv_text,
+)
+from tests.test_packets import _reference_find_loop
 
 
 def test_read_parquet(spark, sf_dir):
@@ -36,6 +43,69 @@ def test_read_kv_text_packets(spark, tmp_path):
     assert rows[1]["t"] == "rating" and rows[1]["attrs"]["x"] == "a=b"
     assert rows[2]["f"] == "in.cdr"
     assert rows[None]["t"] == "orphan"  # invalid packet visible pre-filter
+
+
+_SEPS = ["|", ";", "\u00a6"]
+#: every separator is plain data under the other two
+_LINE_ALPHABET = "abst=\u00e9" + "".join(_SEPS)
+
+
+@settings(max_examples=20, deadline=None)
+@given(
+    sep=st.sampled_from(_SEPS),
+    lines=st.lists(st.text(alphabet=_LINE_ALPHABET, max_size=16), min_size=1, max_size=8),
+)
+@example(sep="|", lines=["|s=1||t=a|", "||", "s=2|", ""])
+@example(sep="\u00a6", lines=["\u00a6\u00a6s=1|t=a\u00a6", "t=b;x=\u00e9\u00a6"])
+def test_kv_text_readers_match_reference_split(spark, tmp_path_factory, sep, lines):
+    """A kv_text line is the reference packet with ``sep`` for each
+    newline: its entries are the find-loop over ``line.replace(sep,
+    "\\n") + "\\n"``, wherever separators sit (leading, trailing,
+    adjacent) and whatever the other separators' characters do in
+    values. The file reader and ``kafka_packets`` both hold to it."""
+    want = sorted(sorted(dict(_reference_find_loop(line.replace(sep, "\n") + "\n")).items())
+                  for line in lines)
+    path = tmp_path_factory.mktemp("kv") / "packets.txt"
+    path.write_text("".join(line + "\n" for line in lines), encoding="utf-8")
+    from_file = DEFAULT.read(spark, "kv_text", str(path), sep=sep)
+    records = spark.createDataFrame([(line.encode(),) for line in lines], "value binary")
+    from_kafka = kafka_packets(records, sep=sep)
+    for df in (from_file, from_kafka):
+        got = sorted(sorted(r["attrs"].items()) for r in df.select("attrs").collect())
+        assert got == want
+
+
+def test_multichar_sep_is_rejected_at_every_entry_point(spark, tmp_path):
+    """A separator longer than one character used to corrupt data
+    silently (``translate`` mapped only its first character and deleted
+    the rest from every value); now each entry point refuses it."""
+    landing = tmp_path / "in"
+    landing.mkdir()
+    (landing / "p.txt").write_text("s=1abt=rating\n")
+    attrs = spark.createDataFrame([({"s": "1"},)], "attrs map<string,string>")
+    records = spark.createDataFrame([(b"s=1abt=rating",)], "value binary")
+    for sep in ("ab", ""):
+        entry_points = [
+            lambda: DEFAULT.read(spark, "kv_text", str(landing), sep=sep),
+            lambda: DEFAULT.read_stream(spark, "kv_text", str(landing), None, sep=sep),
+            lambda: write_kv_text(attrs, str(tmp_path / "out"), sep=sep),
+            lambda: kafka_packets(records, sep=sep),
+        ]
+        for call in entry_points:
+            with pytest.raises(ValueError, match="exactly one character"):
+                call()
+    assert not (tmp_path / "out").exists()
+
+
+def test_kv_text_roundtrip_with_non_ascii_sep(spark, tmp_path):
+    """``write_kv_text`` writes the whole separator (not one byte of
+    it), so a non-ASCII ``sep`` reads back; ``|`` is then plain data."""
+    packets = [{"s": "1", "t": "a|b", "x": "\u00e9=1"}, {"s": "2", "f": "in|out.cdr"}]
+    df = spark.createDataFrame([(p,) for p in packets], "attrs map<string,string>")
+    out = str(tmp_path / "wire")
+    write_kv_text(df, out, sep="\u00a6")
+    back = DEFAULT.read(spark, "kv_text", out, sep="\u00a6")
+    assert sorted((r["attrs"] for r in back.collect()), key=lambda m: m["s"]) == packets
 
 
 def test_unknown_format_error(spark):

@@ -7,10 +7,12 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import time
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from etl_work_flow_for_big_data_spark.sources.registry import DEFAULT as SOURCES
 from etl_work_flow_for_big_data_spark.streaming.engine import (
@@ -19,7 +21,10 @@ from etl_work_flow_for_big_data_spark.streaming.engine import (
     ACTION_STOP,
     PipelineManager,
 )
-from etl_work_flow_for_big_data_spark.streaming.sinks import start_routed_stream
+from etl_work_flow_for_big_data_spark.streaming.sinks import (
+    route_fanout_writer,
+    start_routed_stream,
+)
 from etl_work_flow_for_big_data_spark.streaming.windows import (
     dedup_within_watermark,
     tumbling_agg,
@@ -766,3 +771,165 @@ def test_near_dedup_collision_check_is_mode_scoped(spark):
 
     with pytest.raises(ValueError, match="__simhash"):
         near_dedup_within_watermark(sim_col, "text", mode="exact")
+
+
+# -- state sizing of the routed stream ----------------------------------
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+@pytest.fixture
+def caller_partitions(spark):
+    """The caller's session runs batch work at 5 shuffle partitions, a
+    count no routed stream below asks for."""
+    saved = spark.conf.get(SHUFFLE_PARTITIONS)
+    spark.conf.set(SHUFFLE_PARTITIONS, "5")
+    yield "5"
+    spark.conf.set(SHUFFLE_PARTITIONS, saved)
+
+
+def _routed_dedup(spark, indir):
+    stream = SOURCES.read_stream(spark, "json", str(indir), EVENTS_SCHEMA)
+    return dedup_within_watermark(stream, ["event_id"]).withColumn("route", F.col("event_type"))
+
+
+def _checkpoint_state_partitions(ckpt) -> int:
+    """Partition directories of the checkpoint's first state operator."""
+    return sum(d.isdigit() for d in os.listdir(os.path.join(ckpt, "state", "0")))
+
+
+def _state_instances(query) -> list[int]:
+    return [p["stateOperators"][0]["numStateStoreInstances"]
+            for p in query.recentProgress if p["stateOperators"]]
+
+
+def test_routed_stream_sizes_new_checkpoint_state(spark, tmp_path, caller_partitions):
+    """A new checkpoint gets one state partition whatever the session's
+    shuffle-partition count: recorded in the offset log, one state
+    directory, one store instance, one file per route per batch. The
+    caller's conf is unchanged once ``start()`` returns."""
+    indir = tmp_path / "in"
+    _write_events_json(indir, _BASE + [dict(_BASE[0])])
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    q = start_routed_stream(_routed_dedup(spark, indir), out, ckpt)
+    assert spark.conf.get(SHUFFLE_PARTITIONS) == caller_partitions
+    q.awaitTermination(120)
+    assert q.exception() is None
+    with open(os.path.join(ckpt, "offsets", "0")) as f:
+        offsets_conf = json.loads(f.read().splitlines()[1])["conf"]
+    assert offsets_conf[SHUFFLE_PARTITIONS] == "1"
+    assert _checkpoint_state_partitions(ckpt) == 1
+    assert _state_instances(q) and set(_state_instances(q)) == {1}
+    rows = spark.read.parquet(out).collect()
+    assert sorted(r["event_id"] for r in rows) == [1, 2, 3, 4]
+    route_dirs = glob.glob(os.path.join(out, "batch_id=*", "route=*"))
+    assert route_dirs and all(len(glob.glob(os.path.join(d, "*.parquet"))) == 1
+                              for d in route_dirs)
+
+
+def test_concurrent_routed_stream_starts_each_get_one_state_partition(spark, tmp_path,
+                                                                      caller_partitions):
+    """Starts racing on one session each create a one-partition
+    checkpoint, and the caller's value survives them all."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    def start(i):
+        indir = tmp_path / f"in{i}"
+        _write_events_json(indir, _BASE)
+        ckpt = str(tmp_path / f"ckpt{i}")
+        q = start_routed_stream(_routed_dedup(spark, indir), str(tmp_path / f"out{i}"), ckpt)
+        q.awaitTermination(120)
+        assert q.exception() is None
+        return _checkpoint_state_partitions(ckpt)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(6) as pool:
+            got = list(pool.map(start, range(6), timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == [1] * 6
+    assert spark.conf.get(SHUFFLE_PARTITIONS) == caller_partitions
+
+
+def test_routed_stream_sets_conf_only_for_a_new_checkpoint(spark, tmp_path,
+                                                           caller_partitions, monkeypatch):
+    """A checkpoint whose offset log holds a batch keeps its count on
+    resume, so the session conf is left alone; an empty offset log is
+    still a new checkpoint."""
+    seen = []
+    monkeypatch.setattr(DataStreamWriter, "start",
+                        lambda self: seen.append(spark.conf.get(SHUFFLE_PARTITIONS)))
+    stream, out, ckpt = _routed_dedup(spark, tmp_path), str(tmp_path / "out"), tmp_path / "ckpt"
+    start_routed_stream(stream, out, str(ckpt))
+    (ckpt / "offsets").mkdir(parents=True)
+    start_routed_stream(stream, out, str(ckpt))
+    (ckpt / "offsets" / "0").write_text("v1\n{}\n")
+    start_routed_stream(stream, out, str(ckpt))
+    assert seen == ["1", "1", caller_partitions]
+    assert spark.conf.get(SHUFFLE_PARTITIONS) == caller_partitions
+
+
+def test_routed_stream_keeps_a_conf_set_while_it_starts(spark, tmp_path, caller_partitions,
+                                                        monkeypatch):
+    """A value set on the session while ``start()`` runs (by another
+    thread) is not undone by the restore."""
+
+    def start(self):
+        spark.conf.set(SHUFFLE_PARTITIONS, "7")
+        raise RuntimeError("start failed")
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    with pytest.raises(RuntimeError, match="start failed"):
+        start_routed_stream(_routed_dedup(spark, tmp_path), str(tmp_path / "out"),
+                            str(tmp_path / "ckpt"))
+    assert spark.conf.get(SHUFFLE_PARTITIONS) == "7"
+
+
+def test_routed_stream_restores_conf_when_start_raises(spark, tmp_path, caller_partitions):
+    # a streaming aggregate without a watermark cannot run in append mode
+    stream = SOURCES.read_stream(spark, "json", str(tmp_path), EVENTS_SCHEMA)
+    counts = stream.groupBy(F.col("event_type").alias("route")).count()
+    with pytest.raises(Exception, match="(?i)append"):
+        start_routed_stream(counts, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    assert spark.conf.get(SHUFFLE_PARTITIONS) == caller_partitions
+
+
+def test_routed_stream_resumes_checkpoint_at_its_state_count(spark, tmp_path,
+                                                             caller_partitions):
+    """A checkpoint created at 4 state partitions by a raw
+    ``writeStream`` keeps them when ``start_routed_stream`` resumes it:
+    the dedup state survives, so a record redelivered after the restart
+    is dropped and each route holds its distinct records once."""
+    indir = tmp_path / "in"
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    _write_events_json(indir, _BASE)
+    spark.conf.set(SHUFFLE_PARTITIONS, "4")
+    try:
+        q = (
+            _routed_dedup(spark, indir).writeStream
+            .foreachBatch(route_fanout_writer(out))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(SHUFFLE_PARTITIONS, caller_partitions)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert _checkpoint_state_partitions(ckpt) == 4
+
+    # event 2 again (inside the watermark horizon) plus one new event
+    new = {"event_id": 5, "ts": "2024-01-01 01:50:00", "user_id": 3,
+           "event_type": "click", "value": 5.0}
+    _write_events_json(indir, [dict(_BASE[1]), new])
+    q2 = start_routed_stream(_routed_dedup(spark, indir), out, ckpt)
+    q2.awaitTermination(120)
+    assert q2.exception() is None
+    assert _checkpoint_state_partitions(ckpt) == 4
+    assert _state_instances(q2) and set(_state_instances(q2)) == {4}
+    per_route = {r["route"]: r["count"]
+                 for r in spark.read.parquet(out).groupBy("route").count().collect()}
+    assert per_route == {"view": 3, "click": 2}
