@@ -4,27 +4,37 @@ The reference registers protocol plugins by name (ftp/sftp/ftps/local)
 and resolves them at use time
 (``/root/reference/ProtocolFactory.cpp:78-118``, registration at
 ``MFramework.cpp:152-155``). Here the registry keys are data formats
-(batch + streaming readers over a landing zone) plus fetch protocols
-for moving remote files INTO the landing zone; on a cluster the
-landing zone is an object store and fetch becomes a no-op mount.
+(readers over a landing zone) plus fetch protocols for moving remote
+files INTO the landing zone; on a cluster the landing zone is an object
+store and fetch becomes a no-op mount.
 
-Batch formats: parquet, csv, json, text, kv_text (wire packets),
-jdbc (driver jar on the classpath — Derby works out of the box since
-Spark ships it), kafka (connector jar required for broker I/O; the
-registration, options and decode chain are live regardless).
-Streaming formats: parquet, csv, json, text, kv_text, kafka via
-``read_stream``.
+Each format registers ONE reader ``fn(reader, path, **opts)``: ``read``
+passes ``spark.read``; ``read_stream`` passes ``spark.readStream``, with
+``.schema(schema)`` applied when a schema is given. A streamable format
+(parquet, csv, json, text, orc, kv_text, kafka) registers the same
+function in both tables; avro and jdbc are batch only. avro, jdbc and
+kafka need a connector or driver on the classpath (Derby ships with
+Spark); a missing one surfaces as a RuntimeError naming what to add,
+and every other error propagates untouched.
 """
 
 from __future__ import annotations
 
+import contextlib
 import shutil
 from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+
+def _lookup(table: dict[str, Any], what: str, name: str) -> Any:
+    try:
+        return table[name]
+    except KeyError:
+        raise KeyError(f"unknown {what} {name!r}; registered: {sorted(table)}") from None
 
 
 class SourceRegistry:
@@ -43,24 +53,15 @@ class SourceRegistry:
         (self._stream if streaming else self._batch)[fmt] = fn
 
     def read(self, spark: SparkSession, fmt: str, path: str, **opts: Any) -> DataFrame:
-        try:
-            fn = self._batch[fmt]
-        except KeyError:
-            raise KeyError(
-                f"unknown source format {fmt!r}; registered: {sorted(self._batch)}"
-            ) from None
-        return fn(spark, path, **opts)
+        return _lookup(self._batch, "source format", fmt)(spark.read, path, **opts)
 
     def read_stream(
-        self, spark: SparkSession, fmt: str, path: str, schema: StructType | str, **opts: Any
+        self, spark: SparkSession, fmt: str, path: str, schema: StructType | str | None,
+        **opts: Any,
     ) -> DataFrame:
-        try:
-            fn = self._stream[fmt]
-        except KeyError:
-            raise KeyError(
-                f"unknown streaming format {fmt!r}; registered: {sorted(self._stream)}"
-            ) from None
-        return fn(spark, path, schema, **opts)
+        fn = _lookup(self._stream, "streaming format", fmt)
+        reader = spark.readStream if schema is None else spark.readStream.schema(schema)
+        return fn(reader, path, **opts)
 
     # -- fetch protocols (ProtocolFactory analog) -----------------------
     def register_protocol(self, proto: str, fn: Callable[..., str]):
@@ -68,13 +69,7 @@ class SourceRegistry:
         self._fetch[proto] = fn
 
     def fetch(self, proto: str, src: str, dst: str, **opts: Any) -> str:
-        try:
-            fn = self._fetch[proto]
-        except KeyError:
-            raise KeyError(
-                f"unknown protocol {proto!r}; registered: {sorted(self._fetch)}"
-            ) from None
-        return fn(src, dst, **opts)
+        return _lookup(self._fetch, "protocol", proto)(src, dst, **opts)
 
     def protocols(self) -> list[str]:
         return sorted(self._fetch)
@@ -82,55 +77,77 @@ class SourceRegistry:
 
 DEFAULT = SourceRegistry()
 
+#: connector -> (what Spark's error says when it is missing, how to add it)
+_CONNECTORS = {
+    "avro": (
+        ("Failed to find data source: avro",),
+        "the spark-avro module (spark.jars.packages="
+        "org.apache.spark:spark-avro_2.13:<spark-version>)",
+    ),
+    "kafka": (
+        ("Failed to find data source: kafka",),
+        "the spark-sql-kafka-0-10 connector jar (spark.jars.packages="
+        "org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>)",
+    ),
+    "jdbc": (
+        ("ClassNotFound", "No suitable driver", "CANNOT_FIND_JDBC_DRIVER", "driverClass"),
+        "a JDBC driver: put the driver jar on the Spark classpath "
+        "(spark.jars) or pass driver=<class> in opts",
+    ),
+}
+
+
+@contextlib.contextmanager
+def _connector_gate(connector: str):
+    """Rewrap only an error that means the connector or driver is
+    missing, as a RuntimeError naming what to add. Everything else —
+    a missing table, a bad option, a constraint violation — propagates
+    untouched: its own text is the useful part, and a blanket "missing
+    jar" message would misdiagnose it."""
+    markers, needs = _CONNECTORS[connector]
+    try:
+        yield
+    except Exception as exc:
+        if not any(m in f"{type(exc).__name__}: {exc}" for m in markers):
+            raise
+        raise RuntimeError(
+            f"{connector} could not resolve {needs}; underlying error: {exc}"
+        ) from exc
+
 
 def _reader(fmt: str):
-    def fn(spark: SparkSession, path: str, **opts: Any) -> DataFrame:
-        return spark.read.options(**opts).format(fmt).load(path)
-
-    return fn
-
-
-def _stream_reader(fmt: str):
-    def fn(spark: SparkSession, path: str, schema, **opts: Any) -> DataFrame:
-        reader = spark.readStream.options(**opts).format(fmt)
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.load(path)
+    def fn(reader, path: str, **opts: Any) -> DataFrame:
+        return reader.options(**opts).format(fmt).load(path)
 
     return fn
 
 
 for _fmt in ("parquet", "csv", "json", "text", "orc"):
-    DEFAULT.register(_fmt, _reader(_fmt))
-    DEFAULT.register(_fmt, _stream_reader(_fmt), streaming=True)
+    _fn = _reader(_fmt)
+    DEFAULT.register(_fmt, _fn)
+    DEFAULT.register(_fmt, _fn, streaming=True)
 
 
-def _read_avro(spark: SparkSession, path: str, **opts: Any) -> DataFrame:
+def _read_avro(reader, path: str, **opts: Any) -> DataFrame:
     """Avro ships as an external Spark module (spark-avro); registered
-    with a clear gate so the registry surface is complete either way."""
-    try:
-        return spark.read.options(**opts).format("avro").load(path)
-    except Exception as exc:
-        raise RuntimeError(
-            "avro source needs the spark-avro module on the classpath "
-            "(spark.jars.packages=org.apache.spark:spark-avro_2.13:"
-            f"<spark-version>); underlying error: {exc}"
-        ) from exc
+    behind the connector gate so the registry surface is complete
+    either way."""
+    with _connector_gate("avro"):
+        return reader.options(**opts).format("avro").load(path)
 
 
 DEFAULT.register("avro", _read_avro)
 
 
-def _read_kv_text(spark: SparkSession, path: str, **opts: Any) -> DataFrame:
+def _read_kv_text(reader, path: str, sep: str = "|", **opts: Any) -> DataFrame:
     """Wire-packet files: one packet per line (entries separated by the
     substitute char ``sep`` since raw packets are multi-line), parsed
     to attrs + promoted keys via the parse_packets operator."""
-    sep = _check_sep(opts.pop("sep", "|"))
+    sep = _check_sep(sep)
     from etl_work_flow_for_big_data_spark.operators.transforms import parse_packets
 
-    raw = spark.read.options(**opts).text(path)
-    df = raw.select(_line_payload(sep))
-    return parse_packets(df)
+    raw = reader.options(**opts).text(path)
+    return parse_packets(raw.select(_line_payload(sep)))
 
 
 def _check_sep(sep: str) -> str:
@@ -147,35 +164,30 @@ def _line_payload(sep: str, text="value"):
     return F.concat(F.replace(text, F.lit(sep), F.lit("\n")), F.lit("\n")).alias("payload")
 
 
-def _read_kv_text_stream(spark: SparkSession, path: str, schema, **opts: Any) -> DataFrame:
-    sep = _check_sep(opts.pop("sep", "|"))
-    from etl_work_flow_for_big_data_spark.operators.transforms import parse_packets
-
-    raw = spark.readStream.options(**opts).text(path)
-    df = raw.select(_line_payload(sep))
-    return parse_packets(df)
-
-
 DEFAULT.register("kv_text", _read_kv_text)
-DEFAULT.register("kv_text", _read_kv_text_stream, streaming=True)
+DEFAULT.register("kv_text", _read_kv_text, streaming=True)
 
 
-def _read_jdbc(spark: SparkSession, path: str, **opts: Any) -> DataFrame:
+def _read_jdbc(reader, path: str, **opts: Any) -> DataFrame:
     """A4: relational scan (the reference's Oracle config/dim reads,
     MFramework.cpp:344-376). ``path`` is the JDBC URL; pass
     ``dbtable``/``query`` + credentials as options. Requires the JDBC
     driver jar on the classpath — raises a clear error otherwise."""
-    try:
-        return spark.read.format("jdbc").option("url", path).options(**opts).load()
-    except Exception as exc:  # driver missing / bad URL — explain
-        raise RuntimeError(
-            "jdbc source needs a JDBC driver jar on the Spark classpath "
-            "(spark.jars) and url/dbtable options; underlying error: "
-            f"{exc}"
-        ) from exc
+    with _connector_gate("jdbc"):
+        return reader.format("jdbc").option("url", path).options(**opts).load()
 
 
 DEFAULT.register("jdbc", _read_jdbc)
+
+
+def _has_raw_newline(attrs: Column) -> Column:
+    """True when a raw newline occurs in any key or value of the
+    ``attrs`` map: on the wire it is indistinguishable from the entry
+    terminator. The check runs on the map, not on the serialized wire,
+    which legitimately ends every entry with a newline."""
+    return F.exists(F.map_values(attrs), lambda v: F.instr(v, "\n") > 0) | F.exists(
+        F.map_keys(attrs), lambda k: F.instr(k, "\n") > 0
+    )
 
 
 def write_kv_text(df: DataFrame, path: str, attrs_col: str = "attrs", sep: str = "|") -> None:
@@ -187,21 +199,14 @@ def write_kv_text(df: DataFrame, path: str, attrs_col: str = "attrs", sep: str =
 
     _check_sep(sep)
     wire = serialize_map(F.col(attrs_col))
-    # neither the separator NOR a raw newline may occur inside any
-    # value — after the swap both are indistinguishable from entry
+    # neither the separator NOR a raw newline may occur inside any key
+    # or value — after the swap both are indistinguishable from entry
     # boundaries and the round-trip would silently split the value
     # into bogus entries. Fail loudly, IN-ROW, inside the same write
     # pass (a filter+count pre-scan would double the full scan at
-    # 100 TB just for a sanity check). The newline check runs on the
-    # raw map KEYS AND VALUES (the serialized wire legitimately uses
-    # '\n' as its entry terminator, so checking the wire itself would
-    # always fire; a newline inside a key corrupts framing exactly
-    # like one inside a value).
-    value_has_newline = F.exists(
-        F.map_values(F.col(attrs_col)), lambda v: F.instr(v, "\n") > 0
-    ) | F.exists(F.map_keys(F.col(attrs_col)), lambda k: F.instr(k, "\n") > 0)
+    # 100 TB just for a sanity check).
     guarded = F.when(
-        (F.instr(wire, sep) > 0) | value_has_newline,
+        (F.instr(wire, sep) > 0) | _has_raw_newline(F.col(attrs_col)),
         F.raise_error(
             F.concat(
                 F.lit(
@@ -285,15 +290,11 @@ def kafka_wire_frame(
     is the broker-independent (and unit-tested) half of A2."""
     from etl_work_flow_for_big_data_spark.functions.packets import serialize_map
 
-    # same wire integrity rule as write_kv_text: a raw newline inside a
-    # key or value is indistinguishable from the entry terminator on
-    # the consumer side — fail in-row rather than corrupt silently
-    value_has_newline = F.exists(
-        F.map_values(F.col(attrs_col)), lambda v: F.instr(v, "\n") > 0
-    ) | F.exists(F.map_keys(F.col(attrs_col)), lambda k: F.instr(k, "\n") > 0)
+    # same wire integrity rule as write_kv_text: fail in-row rather
+    # than corrupt the consumer's framing silently
     value = (
         F.when(
-            value_has_newline,
+            _has_raw_newline(F.col(attrs_col)),
             F.raise_error(
                 F.concat(
                     F.lit(
@@ -330,64 +331,34 @@ def write_kafka(
     """A2 queue producer on kafka: wire-serialize and publish. Needs
     the connector jar (same gate as the readers)."""
     wire = kafka_wire_frame(df, attrs_col, key_col)
-    try:
+    with _connector_gate("kafka"):
         (
             wire.write.format("kafka")
             .option("kafka.bootstrap.servers", bootstrap)
             .option("topic", topic)
             .save()
         )
-    except Exception as exc:
-        raise RuntimeError(
-            "kafka sink needs the spark-sql-kafka-0-10 connector jar on "
-            "the classpath (spark.jars.packages="
-            "org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>); "
-            f"underlying error: {exc}"
-        ) from exc
 
 
-def _read_kafka(spark: SparkSession, path: str, **opts: Any) -> DataFrame:
-    """Batch kafka scan; ``path`` is the bootstrap-server list.
+def _read_kafka(reader, path: str, **opts: Any) -> DataFrame:
+    """Kafka scan, batch or streaming; ``path`` is the bootstrap-server
+    list. The record schema is fixed by the connector, so a stream
+    takes no schema.
 
     Jar provenance note: the spark-sql-kafka-0-10 connector is NOT
-    bundled with pyspark, the build sandbox has no network (Maven
-    Central unresolvable) and no jar on disk, so an end-to-end
-    produce/consume round-trip cannot run here — the option builder,
-    wire codec (``kafka_wire_frame``/``kafka_packets``) and this
-    jar-gate contract are what the tests pin. On any real deployment
-    the standard ``spark.jars.packages`` line in the error message
-    below makes the same code path live without modification."""
+    bundled with pyspark, so without it an end-to-end produce/consume
+    round-trip cannot run — the option builder, wire codec
+    (``kafka_wire_frame``/``kafka_packets``) and this jar-gate contract
+    are what the tests pin. On a deployment, the ``spark.jars.packages``
+    line in the gate's error message makes the same code path live
+    without modification."""
     o = kafka_reader_options(path, **opts)
-    try:
-        return spark.read.format("kafka").options(**o).load()
-    except Exception as exc:
-        raise RuntimeError(
-            "kafka source needs the spark-sql-kafka-0-10 connector jar "
-            "on the classpath (spark.jars.packages="
-            "org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>); "
-            f"underlying error: {exc}"
-        ) from exc
-
-
-def _read_kafka_stream(
-    spark: SparkSession, path: str, schema, **opts: Any
-) -> DataFrame:
-    """Streaming kafka source (schema arg unused — kafka's record
-    schema is fixed by the connector)."""
-    o = kafka_reader_options(path, **opts)
-    try:
-        return spark.readStream.format("kafka").options(**o).load()
-    except Exception as exc:
-        raise RuntimeError(
-            "kafka source needs the spark-sql-kafka-0-10 connector jar "
-            "on the classpath (spark.jars.packages="
-            "org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>); "
-            f"underlying error: {exc}"
-        ) from exc
+    with _connector_gate("kafka"):
+        return reader.format("kafka").options(**o).load()
 
 
 DEFAULT.register("kafka", _read_kafka)
-DEFAULT.register("kafka", _read_kafka_stream, streaming=True)
+DEFAULT.register("kafka", _read_kafka, streaming=True)
 
 
 # -- fetch protocols -----------------------------------------------------
@@ -564,13 +535,7 @@ class SinkRegistry:
         self._sinks[fmt] = fn
 
     def write(self, fmt: str, df: DataFrame, path: str, **opts: Any) -> None:
-        try:
-            fn = self._sinks[fmt]
-        except KeyError:
-            raise KeyError(
-                f"unknown sink format {fmt!r}; registered: {sorted(self._sinks)}"
-            ) from None
-        fn(df, path, **opts)
+        _lookup(self._sinks, "sink format", fmt)(df, path, **opts)
 
     def formats(self) -> list[str]:
         return sorted(self._sinks)
@@ -623,7 +588,7 @@ def write_jdbc(
     shipping a 100 TB fact table into a row store. Requires the JDBC
     driver jar on the classpath — raises a clear error otherwise.
     """
-    try:
+    with _connector_gate("jdbc"):
         (
             df.write.format("jdbc")
             .option("url", url)
@@ -632,24 +597,6 @@ def write_jdbc(
             .mode(mode)
             .save()
         )
-    except Exception as exc:
-        # Only rewrap when the failure actually smells like driver
-        # resolution: a blanket "you are missing the driver jar"
-        # message would misdiagnose constraint violations, auth
-        # failures and type mismatches (ADVICE r13). Everything else
-        # propagates untouched — the JDBC error text is the useful
-        # part.
-        msg = f"{type(exc).__name__}: {exc}"
-        if any(k in msg for k in (
-                "ClassNotFound", "No suitable driver",
-                "CANNOT_FIND_JDBC_DRIVER", "driverClass")):
-            raise RuntimeError(
-                "jdbc sink could not resolve a JDBC driver for "
-                f"{url!r}: put the driver jar on the Spark classpath "
-                "(spark.jars) or pass driver=<class> in opts; "
-                f"underlying error: {exc}"
-            ) from exc
-        raise
 
 
 SINKS.register(

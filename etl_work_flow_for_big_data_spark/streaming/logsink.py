@@ -4,9 +4,11 @@ The reference builds leveled log packets (``s=1``, ``c=component``,
 ``l=letter``, ``m=ts|session|msg``) and publishes them to a central
 LOGGER_DATA queue after a bitmask admission check
 (``/root/reference/LoggerWriter.cpp:171-224``). Here log records are
-rows appended to a partitioned log table via foreachBatch; admission
-uses the same ``global_mask & level`` predicate, and the packet shape
-is reproduced exactly so downstream consumers of the reference's log
+rows appended to a log table partitioned by level letter via
+foreachBatch with ``streaming.sinks.route_fanout_writer(base_dir, "l")``
+(per-batch overwrite dirs for replay idempotence); admission uses the
+same ``global_mask & level`` predicate, and the packet shape is
+reproduced exactly so downstream consumers of the reference's log
 stream could read ours.
 """
 
@@ -47,17 +49,3 @@ def build_log_packets(
         ).alias("m"),
     )
 
-
-def log_table_writer(base_dir: str):
-    """foreachBatch sink: append admitted log packets to a parquet log
-    table partitioned by level letter (per-batch overwrite dirs for
-    replay idempotence, same ledger pattern as the routed sink)."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.write.mode("overwrite")
-            .partitionBy("l")
-            .parquet(f"{base_dir}/batch_id={batch_id}")
-        )
-
-    return write

@@ -21,18 +21,18 @@ from pyspark.sql import DataFrame
 
 
 def route_fanout_writer(
-    base_dir: str, route_col: str = "route", fmt: str = "parquet"
+    base_dir: str, route_col: str = "route"
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch function: write each micro-batch under
-    ``base_dir/batch_id=N/route=<value>/``. Replays overwrite their own
-    batch directory → exactly-once output without a transactional sink."""
+    """foreachBatch function: write each micro-batch as parquet under
+    ``base_dir/batch_id=N/<route_col>=<value>/``. Replays overwrite
+    their own batch directory → exactly-once output without a
+    transactional sink."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         (
             batch_df.write.mode("overwrite")
             .partitionBy(route_col)
-            .format(fmt)
-            .save(f"{base_dir}/batch_id={batch_id}")
+            .parquet(f"{base_dir}/batch_id={batch_id}")
         )
 
     return write
@@ -49,18 +49,19 @@ def start_routed_stream(
     df: DataFrame,
     base_dir: str,
     checkpoint_dir: str,
-    route_col: str = "route",
+    *,
     trigger_available_now: bool = True,
-    fmt: str = "parquet",
 ):
-    """Start a streaming query that fans out by route with checkpointed
-    exactly-once semantics (G2: checkpointLocation is the offset ledger,
-    the per-batch overwrite is the output ledger). A new checkpoint
-    gets ``_STATE_PARTITIONS`` state partitions: the session conf is set
-    only around ``start()``, so do not start one while other work runs
-    on the same session."""
+    """Start a streaming query that fans out by its ``route`` column
+    with checkpointed exactly-once semantics (G2: checkpointLocation is
+    the offset ledger, the per-batch overwrite is the output ledger).
+    ``trigger_available_now`` drains what has landed and stops; pass
+    False for continuous mediation. A new checkpoint gets
+    ``_STATE_PARTITIONS`` state partitions: the session conf is set only
+    around ``start()``, so do not start one while other work runs on the
+    same session."""
     writer = (
-        df.writeStream.foreachBatch(route_fanout_writer(base_dir, route_col, fmt))
+        df.writeStream.foreachBatch(route_fanout_writer(base_dir))
         .option("checkpointLocation", checkpoint_dir)
     )
     if trigger_available_now:

@@ -55,7 +55,7 @@ def streaming_mediation(spark, work: str) -> None:
         "mediation",
         lambda s: start_routed_stream(
             spec.compile(SOURCES.read_stream(s, "kv_text", landing, None)).drop("attrs"),
-            out, ckpt, "route",
+            out, ckpt,
         ),
     )
     mgr.start("mediation")

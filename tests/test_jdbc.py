@@ -118,6 +118,16 @@ def test_jdbc_sink_real_write_failures_not_misdiagnosed(spark, derby_url):
     assert "could not resolve a JDBC driver" not in str(ei.value)
 
 
+def test_jdbc_source_real_read_failures_not_misdiagnosed(spark, derby_url):
+    """The read-side mirror: a missing table is the database's error,
+    not a rewrapped 'missing driver jar' message — the driver is there
+    and works."""
+    with pytest.raises(Exception) as ei:
+        SOURCES.read(spark, "jdbc", derby_url, dbtable='"no_such_table"')
+    assert "JDBC driver" not in str(ei.value)
+    assert "no_such_table" in str(ei.value)
+
+
 def test_jdbc_query_pushdown(spark, derby_url):
     """Predicate reaches the remote database: the jdbc source accepts a
     pushdown query so only matching config rows cross the wire."""

@@ -147,7 +147,7 @@ def test_closed_loop_crash_and_resume(spark, tmp_path):
 
     # -- run B: resume from the checkpoint, no injected crash --------
     q2 = start_routed_stream(
-        _mediation_stream(spark, str(landing)), out, ckpt, "route"
+        _mediation_stream(spark, str(landing)), out, ckpt
     )
     q2.awaitTermination(120)
     assert q2.exception() is None

@@ -133,6 +133,66 @@ def test_jdbc_gated_with_clear_error(spark):
         DEFAULT.read(spark, "jdbc", "jdbc:oracle:thin:@db:1521/X", dbtable="M_BROKER")
 
 
+def test_non_connector_errors_propagate_unwrapped(spark, monkeypatch):
+    """The connector gate rewraps only a missing connector or driver:
+    any other error from ``load`` (here a bad option) reaches the
+    caller as it was raised."""
+
+    def bad_load(self, *args, **kwargs):
+        raise ValueError("bad option")
+
+    monkeypatch.setattr(type(spark.read), "load", bad_load)
+    monkeypatch.setattr(type(spark.readStream), "load", bad_load)
+    for read in (
+        lambda: DEFAULT.read(spark, "kafka", "b:9092", topic="t"),
+        lambda: DEFAULT.read_stream(spark, "kafka", "b:9092", None, topic="t"),
+        lambda: DEFAULT.read(spark, "avro", "/nowhere"),
+        lambda: DEFAULT.read(spark, "jdbc", "jdbc:derby:nowhere", dbtable="t"),
+    ):
+        with pytest.raises(ValueError, match="bad option"):
+            read()
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "csv", "json", "text", "orc", "kv_text"])
+def test_batch_and_stream_readers_give_same_rows(spark, tmp_path, fmt):
+    """One reader per format: ``read_stream`` drained with availableNow
+    gives the rows ``read`` gives over the same directory. The kv_text
+    input holds a line with no ``s`` and ends in a line cut mid-value
+    with no terminator; neither reader may abort on them."""
+    src = tmp_path / "in"
+    if fmt == "kv_text":
+        src.mkdir()
+        (src / "a.kv").write_text("s=1|t=a|x=10\nt=orphan|x=2\n")
+        (src / "b.kv").write_text("s=3|t=c|x=12\ns=4|t=d|x=1")  # x=1234, cut
+    elif fmt == "text":
+        src.mkdir()
+        (src / "a.txt").write_text("alpha\n\nbeta\n")
+        (src / "b.txt").write_text("gamma")
+    else:
+        df = spark.createDataFrame([(1, "a"), (2, None), (3, "c")], "id long, v string")
+        df.write.option("header", True).format(fmt).save(str(src))
+    opts = {"header": True} if fmt == "csv" else {}
+    batch = DEFAULT.read(spark, fmt, str(src), **opts)
+    schema = None if fmt == "kv_text" else batch.schema
+    stream = DEFAULT.read_stream(spark, fmt, str(src), schema, **opts)
+    name = f"reader_parity_{fmt}"
+    q = stream.writeStream.format("memory").queryName(name).trigger(availableNow=True).start()
+    try:
+        assert q.awaitTermination(120)
+        assert q.exception() is None
+    finally:
+        q.stop()
+    want = batch.collect()
+    assert sorted(map(repr, spark.table(name).collect())) == sorted(map(repr, want))
+    if fmt == "kv_text":
+        assert sorted((r["s"] or 0, r["t"]) for r in want) == [
+            (0, "orphan"), (1, "a"), (3, "c"), (4, "d")
+        ]
+        assert {r["s"]: r["attrs"].get("x") for r in want}[4] == "1"
+    else:
+        assert len(want) == (4 if fmt == "text" else 3)
+
+
 def test_protocol_local_fetch(tmp_path):
     src = tmp_path / "in.cdr"
     src.write_text("s=1\n")

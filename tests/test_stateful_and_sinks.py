@@ -12,10 +12,8 @@ from pyspark.sql import functions as F
 
 from etl_work_flow_for_big_data_spark.sources.registry import DEFAULT as SOURCES
 from etl_work_flow_for_big_data_spark.sources.registry import write_kv_text
-from etl_work_flow_for_big_data_spark.streaming.logsink import (
-    build_log_packets,
-    log_table_writer,
-)
+from etl_work_flow_for_big_data_spark.streaming.logsink import build_log_packets
+from etl_work_flow_for_big_data_spark.streaming.sinks import route_fanout_writer
 from etl_work_flow_for_big_data_spark.streaming.stateful import running_totals_per_key
 
 EVENTS_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double"
@@ -187,7 +185,7 @@ def test_log_sink_admission_and_shape(spark, tmp_path):
     assert rows[m_info]["l"] == "I"
     assert rows["2024-01-01 00:00:01|7|fetch failed"]["l"] == "E"
     # sink writes partitioned by level letter
-    log_table_writer(str(tmp_path / "logs"))(packets, 0)
+    route_fanout_writer(str(tmp_path / "logs"), "l")(packets, 0)
     back = spark.read.parquet(str(tmp_path / "logs"))
     assert sorted(r["l"] for r in back.collect()) == ["E", "I"]
 

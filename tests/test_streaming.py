@@ -81,7 +81,7 @@ def test_routed_fanout_and_checkpoint_restart(spark, tmp_path):
     def run_once():
         stream = SOURCES.read_stream(spark, "json", str(indir), EVENTS_SCHEMA)
         routed = stream.withColumn("route", F.col("event_type"))
-        q = start_routed_stream(routed, str(outdir), str(ckpt), "route")
+        q = start_routed_stream(routed, str(outdir), str(ckpt))
         q.awaitTermination(120)
 
     run_once()
@@ -280,7 +280,6 @@ def test_spec_compiled_kv_stream_end_to_end(spark, tmp_path):
         spec.compile(stream).drop("attrs"),
         str(tmp_path / "out"),
         str(tmp_path / "ckpt"),
-        "route",
     )
     q.awaitTermination(120)
     out = spark.read.parquet(str(tmp_path / "out")).select("s", "route").collect()
@@ -398,7 +397,7 @@ def test_two_component_chained_topology(spark, tmp_path):
     routed = spec_a.compile(stream_a).withColumn(
         "v", F.col("attrs")["v"].cast("long")
     ).drop("attrs")
-    qa = start_routed_stream(routed, str(a_out), str(tmp_path / "ckpt_a"), "route")
+    qa = start_routed_stream(routed, str(a_out), str(tmp_path / "ckpt_a"))
     qa.awaitTermination(120)
 
     # component B: rating — consumes ONLY component A's 'rating' route
