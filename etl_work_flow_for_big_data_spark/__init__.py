@@ -24,6 +24,6 @@ paths (100 TB design goal).
 """
 
 from etl_work_flow_for_big_data_spark.session import get_spark, tune_session
-from etl_work_flow_for_big_data_spark.catalog import TABLES, load_table, load_tables
+from etl_work_flow_for_big_data_spark.catalog import TABLES, load_table
 
-__all__ = ["get_spark", "tune_session", "TABLES", "load_table", "load_tables"]
+__all__ = ["get_spark", "tune_session", "TABLES", "load_table"]

@@ -287,8 +287,3 @@ def fan_out(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every fixture table; keys match the DuckDB oracle views."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}

@@ -1,23 +1,24 @@
 """Multimodal column plumbing: binary payloads + metadata + Pandas-UDF
 feature extraction (SURVEY.md §2.I I5).
 
-Media columns are opaque ``binary`` with a typed metadata struct; all
-per-record compute runs as Arrow-batched ``mapInPandas`` (never
-row-at-a-time Python). Decode is layered by what this environment can
-honestly do:
+Media columns are opaque ``binary`` with a typed metadata struct. Every
+media operator is one per-record function plugged into one kernel,
+``_media_kernel``: a ``fan_out`` projection of (id, content) and one
+Arrow-batched ``mapInPandas`` (never row-at-a-time Python) that hands
+each payload to the function and prefixes the record's id to every
+output row. Each function states its NULL rule, and a NULL or corrupt
+payload yields null output, never a task failure. The functions:
 
 - ``decode_media``: REAL header-level decode — container format +
   pixel dimensions parsed from magic bytes (PNG/GIF/BMP/JPEG), zero
-  dependencies; unknown/corrupt/null payloads yield nulls, never task
-  failures;
+  dependencies;
 - ``decode_pixels``: real PIL-backed pixel decode when PIL is
   importable (or any injected per-record decoder); otherwise raises
   ``NotImplementedError`` with wiring instructions (the honest gate —
   no fake pixels, ever);
-- ``extract_features`` / ``sample_frames``: deterministic fakes that
-  exercise the REAL Spark plumbing — schema contracts, Arrow batch
-  shapes, partition-parallel execution — so the pipeline around the
-  decoder is fully tested.
+- ``extract_features`` / ``resize_media`` / ``sample_frames``:
+  deterministic, SQL-recomputable fakes of embedding, thumbnailing and
+  frame extraction (1-to-N) that exercise the REAL Spark plumbing.
 
 At 100 TB: binaries ride in their own column (parquet column pruning
 keeps metadata-only queries from touching bytes); mapInPandas keeps
@@ -26,7 +27,7 @@ the Python boundary amortized over Arrow batches.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -122,6 +123,39 @@ def _parse_header(b: bytes) -> tuple[str | None, int | None, int | None]:
     return (None, None, None)
 
 
+def _media_kernel(
+    df: DataFrame,
+    id_col: str,
+    content_col: str,
+    schema: str,
+    per_record: Callable[[bytes | None], Iterable[tuple]],
+) -> DataFrame:
+    """The one Arrow-batched shell behind every media operator:
+    ``per_record`` gets each payload as ``bytes`` (``None`` for NULL)
+    and returns that record's output tuples — one for a 1-to-1 kernel,
+    any number for a 1-to-N one. Each tuple gets the record's id in
+    front and fills ``schema``'s columns by position."""
+    # fan_out (r15): a one-file binary table scans as ONE task, so the
+    # whole Arrow kernel ran in a single Python worker; no-op when the
+    # input already has >= cores splits (see catalog.fan_out)
+    src = fan_out(
+        df.select(F.col(id_col).alias("id"), F.col(content_col).alias("content"))
+    )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            # integer column labels: Spark fills ``schema`` by position
+            yield pd.DataFrame.from_records(
+                [
+                    (i, *out)
+                    for i, b in zip(pdf["id"], pdf["content"])
+                    for out in per_record(None if b is None else bytes(b))
+                ]
+            )
+
+    return src.mapInPandas(run, schema=schema)
+
+
 def decode_media(
     df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
 ) -> DataFrame:
@@ -132,35 +166,13 @@ def decode_media(
     headers yield null format/dims — never a task failure. Full pixel
     decode (the PIL/ffmpeg slot) remains honestly gated in
     ``decode_pixels``."""
-    # fan_out (r15): a one-file binary table scans as ONE task, so the
-    # whole Arrow kernel ran in a single Python worker; no-op when the
-    # input already has >= cores splits (see catalog.fan_out)
-    src = fan_out(
-        df.select(F.col(id_col).alias("id"), F.col(content_col).alias("content"))
-    )
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # NULL payloads (nullable binary columns are routine) parse
-            # to all-null, honoring the never-kill-the-task contract
-            parsed = [
-                (None, None, None) if b is None else _parse_header(bytes(b))
-                for b in pdf["content"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "format": [p[0] for p in parsed],
-                    "width": pd.array([p[1] for p in parsed], dtype="Int32"),
-                    "height": pd.array([p[2] for p in parsed], dtype="Int32"),
-                    "n_bytes": pd.array(
-                        [None if b is None else len(b) for b in pdf["content"]],
-                        dtype="Int64",
-                    ),
-                }
-            )
+    def header(b: bytes | None) -> list[tuple]:
+        if b is None:  # NULL payload (routine in binary columns) → all-null row
+            return [(None, None, None, None)]
+        return [(*_parse_header(b), len(b))]
 
-    return src.mapInPandas(parse, schema=DECODE_SCHEMA)
+    return _media_kernel(df, id_col, content_col, DECODE_SCHEMA, header)
 
 
 PIXELS_SCHEMA = "id long, width int, height int, mode string, pixels binary"
@@ -222,39 +234,21 @@ def decode_pixels(
             img.load()
             return (img.width, img.height, img.mode, img.tobytes())
 
-    # fan_out (r15): a one-file binary table scans as ONE task, so the
-    # whole Arrow kernel ran in a single Python worker; no-op when the
-    # input already has >= cores splits (see catalog.fan_out)
-    src = fan_out(
-        df.select(F.col(id_col).alias("id"), F.col(content_col).alias("content"))
-    )
+    def pixels(b: bytes | None) -> list[tuple]:
+        if b is not None:  # NULL payload → all-null row
+            try:
+                w, h, mode, pix = decoder(b)
+                return [(w, h, mode, pix)]
+            except (ImportError, MemoryError):
+                # systemic, not per-record: executor lacks the imaging
+                # library, or the payload OOMed the decode — fail the
+                # task, don't silently null data
+                raise
+            except Exception:  # corrupt/unknown payload → null row
+                pass
+        return [(None, None, None, None)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, modes, px = [], [], [], []
-            for b in pdf["content"]:
-                try:
-                    w, h, mode, pix = decoder(bytes(b))  # raises on None
-                    ws.append(w), hs.append(h), modes.append(mode), px.append(pix)
-                except (ImportError, MemoryError):
-                    # systemic, not per-record: executor lacks the
-                    # imaging library, or the payload OOMed the decode
-                    # — fail the task, don't silently null data
-                    raise
-                except Exception:  # corrupt/unknown/null → null row
-                    ws.append(None), hs.append(None)
-                    modes.append(None), px.append(None)
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "mode": modes,
-                    "pixels": px,
-                }
-            )
-
-    return src.mapInPandas(run, schema=PIXELS_SCHEMA)
+    return _media_kernel(df, id_col, content_col, PIXELS_SCHEMA, pixels)
 
 
 FEATURE_SCHEMA = "id long, n_bytes long, features array<float>"
@@ -270,43 +264,15 @@ def extract_features(df: DataFrame, id_col: str, content_col: str = "content") -
     hash-check this Python stage end-to-end."""
     import hashlib
 
-    # fan_out (r15): a one-file binary table scans as ONE task, so the
-    # whole Arrow kernel ran in a single Python worker; no-op when the
-    # input already has >= cores splits (see catalog.fan_out)
-    src = fan_out(
-        df.select(F.col(id_col).alias("id"), F.col(content_col).alias("content"))
-    )
+    def featurize(b: bytes | None) -> list[tuple]:
+        # NULL payload → all-null row (duck's md5(NULL) is NULL)
+        if b is None:
+            return [(None, None)]
+        h = hashlib.md5(b).hexdigest()
+        words = [float(int(h[j : j + 4], 16)) for j in (0, 4, 8)]
+        return [(len(b), [float(len(b)), *words])]
 
-    def fake_featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for b in pdf["content"]:
-                # NULL payload → all-null row (same never-kill-the-task
-                # contract as decode_media; duck's md5(NULL) is NULL)
-                if b is None:
-                    feats.append(None)
-                    continue
-                h = hashlib.md5(bytes(b)).hexdigest()
-                feats.append(
-                    [
-                        float(len(b)),
-                        float(int(h[0:4], 16)),
-                        float(int(h[4:8], 16)),
-                        float(int(h[8:12], 16)),
-                    ]
-                )
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "n_bytes": pd.array(
-                        [None if b is None else len(b) for b in pdf["content"]],
-                        dtype="Int64",
-                    ),
-                    "features": feats,
-                }
-            )
-
-    return src.mapInPandas(fake_featurize, schema=FEATURE_SCHEMA)
+    return _media_kernel(df, id_col, content_col, FEATURE_SCHEMA, featurize)
 
 
 RESIZE_SCHEMA = "id long, n_bytes long, resized binary"
@@ -321,29 +287,13 @@ def resize_media(
     count). Exact values are SQL-recomputable over ASCII fixtures, so
     the Python stage is oracle-checkable like the feature/frame
     fakes."""
-    # fan_out (r15): a one-file binary table scans as ONE task, so the
-    # whole Arrow kernel ran in a single Python worker; no-op when the
-    # input already has >= cores splits (see catalog.fan_out)
-    src = fan_out(
-        df.select(F.col(id_col).alias("id"), F.col(content_col).alias("content"))
-    )
 
-    def fake_resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # NULL payload → all-null row (never-kill-the-task contract)
-            resized = [None if b is None else bytes(b)[::factor] for b in pdf["content"]]
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "n_bytes": pd.array(
-                        [None if b is None else len(b) for b in pdf["content"]],
-                        dtype="Int64",
-                    ),
-                    "resized": resized,
-                }
-            )
+    def resize(b: bytes | None) -> list[tuple]:
+        if b is None:  # NULL payload → all-null row
+            return [(None, None)]
+        return [(len(b), b[::factor])]
 
-    return src.mapInPandas(fake_resize, schema=RESIZE_SCHEMA)
+    return _media_kernel(df, id_col, content_col, RESIZE_SCHEMA, resize)
 
 
 FRAME_SCHEMA = "id long, frame_idx int, frame_bytes binary"
@@ -355,35 +305,14 @@ def sample_frames(
     """Deterministic fake frame sampling (video-decode twin): slices
     the payload every ``stride`` bytes, one output row per 'frame' —
     exercises the 1-to-N mapInPandas shape real frame extraction uses."""
-    # fan_out (r15): a one-file binary table scans as ONE task, so the
-    # whole Arrow kernel ran in a single Python worker; no-op when the
-    # input already has >= cores splits (see catalog.fan_out)
-    src = fan_out(
-        df.select(F.col(id_col).alias("id"), F.col(content_col).alias("content"))
-    )
 
-    def fake_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for i, b in zip(pdf["id"], pdf["content"]):
-                # NULL payload → no frames (a 1-to-N stage's natural
-                # null semantics: nothing to slice, zero output rows —
-                # matches the oracle's empty generate_series)
-                if b is None:
-                    continue
-                n = max(1, (len(b) + stride - 1) // stride)
-                for k in range(n):
-                    ids.append(i)
-                    idxs.append(k)
-                    frames.append(bytes(b[k * stride : (k + 1) * stride]))
-            # explicit dtypes: an all-null batch yields empty lists,
-            # and empty object columns must still convert to long
-            yield pd.DataFrame(
-                {
-                    "id": pd.array(ids, dtype="Int64"),
-                    "frame_idx": pd.array(idxs, dtype="Int32"),
-                    "frame_bytes": frames,
-                }
-            )
+    def frames(b: bytes | None) -> list[tuple]:
+        # NULL payload → no frames (a 1-to-N stage's natural null
+        # semantics: nothing to slice, zero output rows — matches the
+        # oracle's empty generate_series)
+        if b is None:
+            return []
+        n = max(1, (len(b) + stride - 1) // stride)
+        return [(k, b[k * stride : (k + 1) * stride]) for k in range(n)]
 
-    return src.mapInPandas(fake_frames, schema=FRAME_SCHEMA)
+    return _media_kernel(df, id_col, content_col, FRAME_SCHEMA, frames)

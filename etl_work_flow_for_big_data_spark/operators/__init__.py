@@ -11,9 +11,7 @@ chains sessions via ``M_LINKED_SESSIONS`` rows.
 
 from etl_work_flow_for_big_data_spark.operators.registry import (
     OperatorRegistry,
-    get_operator,
-    list_operators,
     operator,
 )
 
-__all__ = ["OperatorRegistry", "operator", "get_operator", "list_operators"]
+__all__ = ["OperatorRegistry", "operator"]

@@ -1,6 +1,8 @@
 """Physical distribution operators for scale (SURVEY.md §2.F + north
 star): salted joins for skew, bucketed tables for shuffle-free
-co-located joins, partitioned writes for pruning.
+co-located joins. Partitioned writes for pruning are
+``SINKS.write(fmt, df, path, partition_by=cols)``
+(:mod:`..sources.registry`).
 
 These are the knobs a 100 TB deployment turns when AQE alone isn't
 enough: AQE's skew-join split handles moderate skew at runtime, but a
@@ -66,18 +68,3 @@ def write_bucketed(
     if sort_key:
         writer = writer.sortBy(sort_key)
     writer.saveAsTable(table)
-
-
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], fmt: str = "parquet"
-) -> None:
-    """Partition-layout write: predicates on the partition columns
-    become directory pruning (PartitionFilters in the scan) — a filter
-    on route/date reads only matching directories, scanning none of
-    the rest. The physical twin of content-based routing (F1)."""
-    (
-        df.write.mode("overwrite")
-        .partitionBy(*partition_cols)
-        .format(fmt)
-        .save(path)
-    )

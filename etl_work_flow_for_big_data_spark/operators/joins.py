@@ -91,43 +91,35 @@ def range_join(
     value_col: str,
     lo_col: str = "lo",
     hi_col: str = "hi",
-    assume_disjoint: bool = True,
 ) -> DataFrame:
     """Join a fact to a (small) tier/tariff table on
-    ``lo <= value < hi``.
+    ``lo <= value < hi``. Output is the fact's columns followed by the
+    tier's; rows matching no tier are dropped (inner-join semantics).
 
-    Disjoint tiers (the tariff-table norm): collect the tier table at
-    plan time and compile a CASE-WHEN bucketing expression, then emit
-    each tier column as a CASE on the bucket index (literals cast to
-    the tier schema's types). No join at all: the probe stays inside
-    whole-stage codegen — a BroadcastNestedLoopJoin with a range
-    predicate evaluates row-at-a-time and measured ~10× slower on a
-    600k-row fact. Output is the fact's columns followed by the tier's.
-    Rows matching no tier are dropped (inner-join semantics).
+    The tier table is collected at plan time and its ranges picked the
+    path:
 
-    Overlapping tiers (``assume_disjoint=False``): fall back to the
-    general non-equi BNLJ, still broadcasting the tier side.
+    - disjoint tiers (the tariff-table norm): compile a CASE-WHEN
+      bucketing expression, then emit each tier column as a CASE on
+      the bucket index (literals cast to the tier schema's types). No
+      join at all: the probe stays inside whole-stage codegen — a
+      BroadcastNestedLoopJoin with a range predicate evaluates
+      row-at-a-time and measured ~10× slower on a 600k-row fact;
+    - overlapping tiers: the first-match CASE would assign ONE tier
+      where inner-join semantics produce a row per match, so these
+      fall back to the general non-equi join, broadcasting the tier
+      side (one output row per matching tier).
     """
-    cond = (F.col(value_col) >= F.col(lo_col)) & (F.col(value_col) < F.col(hi_col))
-    if not assume_disjoint:
-        return fact.join(F.broadcast(tiers), cond, "inner")
-
     rows = tiers.collect()  # tier table is dim-sized by contract
     if not rows:
         # empty tariff → empty inner-join result with the joined schema
         return fact.filter(F.lit(False)).crossJoin(tiers)
-    # validate the disjointness the CASE compilation relies on: with
-    # overlapping tiers the first-match CASE would silently assign ONE
-    # tier where inner-join semantics produce a row per match.
     by_lo = sorted(rows, key=lambda r: (r[lo_col], r[hi_col]))
-    for a, b in zip(by_lo, by_lo[1:]):
-        if b[lo_col] < a[hi_col]:
-            raise ValueError(
-                f"tier ranges overlap: [{a[lo_col]}, {a[hi_col]}) and "
-                f"[{b[lo_col]}, {b[hi_col]}) — overlapping tiers need "
-                "range_join(..., assume_disjoint=False) (one output "
-                "row per matching tier)"
-            )
+    if any(b[lo_col] < a[hi_col] for a, b in zip(by_lo, by_lo[1:])):
+        cond = (F.col(value_col) >= F.col(lo_col)) & (
+            F.col(value_col) < F.col(hi_col)
+        )
+        return fact.join(F.broadcast(tiers), cond, "inner")
     expr = None
     for i, r in enumerate(rows):
         hit = (F.col(value_col) >= F.lit(r[lo_col])) & (

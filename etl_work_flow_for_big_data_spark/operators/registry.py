@@ -60,11 +60,3 @@ def operator(name: str, registry: OperatorRegistry = DEFAULT):
         return fn
 
     return deco
-
-
-def get_operator(name: str) -> OperatorFn:
-    return DEFAULT.get(name)
-
-
-def list_operators() -> list[str]:
-    return DEFAULT.names()

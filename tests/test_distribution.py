@@ -11,8 +11,8 @@ from etl_work_flow_for_big_data_spark.catalog import load_table
 from etl_work_flow_for_big_data_spark.operators.distribution import (
     salted_join,
     write_bucketed,
-    write_partitioned,
 )
+from etl_work_flow_for_big_data_spark.sources.registry import SINKS
 
 
 def test_salted_join_equivalent_and_spread(spark, sf_dir):
@@ -67,7 +67,7 @@ def test_bucketed_join_no_shuffle(spark, sf_dir, tmp_path):
 def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     ev = load_table(spark, sf_dir, "events")
     path = str(tmp_path / "by_type")
-    write_partitioned(ev, path, ["event_type"])
+    SINKS.write("parquet", ev, path, partition_by=["event_type"])
     back = spark.read.parquet(path).filter(F.col("event_type") == "error")
     plan = back._jdf.queryExecution().executedPlan().toString()
     # the predicate lands in PartitionFilters (directory pruning), not

@@ -1,6 +1,6 @@
-"""range_join unit tests (C6): disjointness validation (ADVICE r1,
-joins.py), the join-free CASE path's output schema and rows, and
-overlapping-tier semantics via the BNLJ fallback."""
+"""range_join unit tests (C6): the path picked from the tiers' ranges,
+the join-free CASE path's output schema and rows, and overlapping-tier
+semantics via the BNLJ fallback."""
 
 from __future__ import annotations
 
@@ -18,12 +18,22 @@ def fact(spark):
     )
 
 
-def test_overlapping_tiers_rejected_on_fast_path(spark, fact):
+def test_overlapping_tiers_fall_back_with_no_option(spark):
+    """Overlapping tiers need no option: range_join sees the overlap in
+    the tiers it collects, takes the broadcast non-equi join and gives
+    one row per matching tier."""
     tiers = spark.createDataFrame(
         [(0.0, 12.0, "a"), (10.0, 20.0, "b")], "lo double, hi double, tier string"
     )
-    with pytest.raises(ValueError, match="tier ranges overlap"):
-        range_join(fact, tiers, "v")
+    fact = spark.createDataFrame(
+        [(1, 5.0), (2, 11.0), (3, 15.0), (4, 25.0)], "id long, v double"
+    )
+    out = range_join(fact, tiers, "v")
+    assert out.columns == ["id", "v", "lo", "hi", "tier"]
+    rows = sorted((r["id"], r["tier"]) for r in out.collect())
+    assert rows == [(1, "a"), (2, "a"), (2, "b"), (3, "b")]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" in plan, plan
 
 
 def test_overlapping_tiers_full_semantics_on_bnlj_path(spark, fact):
@@ -32,7 +42,7 @@ def test_overlapping_tiers_full_semantics_on_bnlj_path(spark, fact):
     )
     rows = sorted(
         (r["id"], r["tier"])
-        for r in range_join(fact, tiers, "v", assume_disjoint=False).collect()
+        for r in range_join(fact, tiers, "v").collect()
     )
     # v=15 falls in BOTH [0,12)? no — in [10,20) only; v=5 in [0,12);
     # a value in the overlap zone [10,12) would produce two rows
@@ -40,7 +50,7 @@ def test_overlapping_tiers_full_semantics_on_bnlj_path(spark, fact):
     fact2 = spark.createDataFrame([(9, 11.0)], "id long, v double")
     both = sorted(
         r["tier"]
-        for r in range_join(fact2, tiers, "v", assume_disjoint=False).collect()
+        for r in range_join(fact2, tiers, "v").collect()
     )
     assert both == ["a", "b"]
 

@@ -298,3 +298,28 @@ def test_resize_media_strides_bytes(media):
     assert bytes(rows[1]["resized"]) == b"hello world"[::4]
     assert rows[2]["n_bytes"] == 130
     assert len(bytes(rows[2]["resized"])) == 33  # ceil(130/4)
+
+
+@pytest.mark.parametrize(
+    "kernel",
+    ["decode_media", "decode_pixels", "extract_features", "resize_media", "sample_frames"],
+)
+def test_null_payload_rule(spark, kernel):
+    """A NULL payload never fails the task: the 1-to-1 kernels give it
+    an all-null row, ``sample_frames`` gives it zero rows; the non-null
+    payload beside it still gets its output."""
+    from etl_work_flow_for_big_data_spark.multimodal import columns
+
+    df = spark.createDataFrame([(1, None), (2, b"hello")], "doc_id long, content binary")
+    if kernel == "decode_pixels":
+        out = columns.decode_pixels(df, decoder=lambda b: (len(b), 1, "L", b))
+    else:
+        out = getattr(columns, kernel)(df, "doc_id")
+    rows = out.collect()
+    assert 2 in {r["id"] for r in rows}
+    nulls = [r for r in rows if r["id"] == 1]
+    if kernel == "sample_frames":
+        assert nulls == []
+    else:
+        assert len(nulls) == 1
+        assert all(v is None for k, v in nulls[0].asDict().items() if k != "id")
