@@ -25,14 +25,6 @@ TABLES = [
     "embeddings",
 ]
 
-#: Dimensions with BOUNDED cardinality (5 regions, 25 nations) — safe
-#: to force-broadcast at any scale factor. customer/supplier/part grow
-#: with SF and must go through ``maybe_broadcast`` instead: a forced
-#: hint overrides autoBroadcastJoinThreshold unconditionally and would
-#: OOM the driver at the 100-TB design point rather than degrade to a
-#: shuffle join.
-BOUNDED_DIMS = {"region", "nation"}
-
 #: Compressed-parquet size above which ``maybe_broadcast`` withholds
 #: the hint. 32 MiB compressed ≈ 64-128 MiB in-memory — at the edge of
 #: the session's 64 MiB autoBroadcastJoinThreshold; beyond it the

@@ -227,7 +227,6 @@ def pairwise_cosine(
     vec_col: str,
     corpus: list[tuple[int, list[float]]],
     mode: str = "pairs",
-    prefilter: float | None = None,
 ) -> DataFrame:
     """Cosine of every df row against every corpus vector.
 
@@ -237,9 +236,6 @@ def pairwise_cosine(
     mode='all' keeps row_id != corpus_id (query-vs-corpus);
     mode='full' keeps every pair (corpus ids in a separate id space —
     e.g. refined k-means centroids — where equality is meaningless).
-    ``prefilter`` drops pairs with raw cosine below it inside the
-    kernel (Arrow-transfer control); pass threshold − 1e-6 so the
-    caller's exact rounded filter is unaffected.
     Returns (d1, d2, cos_raw) — caller rounds/filters/ranks Spark-side.
     """
     if mode not in ("pairs", "all", "full"):
@@ -275,7 +271,7 @@ def pairwise_cosine(
             A = _as_matrix(pdf["v"], corpus_mat.shape[1])
             ids = pdf["d1"].to_numpy(dtype=np.int64)
             yield _score_block(
-                ids, A, corpus_ids, corpus_mat, corpus_norms, mode, prefilter
+                ids, A, corpus_ids, corpus_mat, corpus_norms, mode, None
             )
 
     return src.mapInPandas(compute, schema="d1 long, d2 long, cos_raw double")

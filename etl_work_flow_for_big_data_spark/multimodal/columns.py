@@ -64,18 +64,26 @@ HEADER_FORMATS = ("png", "gif", "bmp", "jpeg")
 DECODE_SCHEMA = "id long, format string, width int, height int, n_bytes long"
 
 
+def _int32_dims(fmt: str, w: int, h: int) -> tuple[str, int | None, int | None]:
+    if w > 2**31 - 1 or h > 2**31 - 1:
+        return (fmt, None, None)
+    return (fmt, w, h)
+
+
 def _parse_header(b: bytes) -> tuple[str | None, int | None, int | None]:
     """(format, width, height) from container magic bytes — pure
     stdlib, no imaging dependency. Unknown payloads return
     (None, None, None); a recognized magic with a truncated/missing
     dimension header returns (format, None, None) — consistently for
-    every format. Never raises: at 100 TB a corrupt record must not
-    kill the task."""
+    every format. A PNG or BMP dimension above 2^31-1 (the int
+    columns of ``DECODE_SCHEMA`` cannot hold it) is a corrupt header
+    and gets the truncated-header answer too. Never raises: at 100 TB
+    a corrupt record must not kill the task."""
     if b[:8] == b"\x89PNG\r\n\x1a\n":
         if len(b) < 24:  # magic present, IHDR dims truncated
             return ("png", None, None)
         # 8-byte signature, IHDR length+type, then 4-byte BE width/height
-        return (
+        return _int32_dims(
             "png",
             int.from_bytes(b[16:20], "big"),
             int.from_bytes(b[20:24], "big"),
@@ -96,7 +104,7 @@ def _parse_header(b: bytes) -> tuple[str | None, int | None, int | None]:
         # (height may be negative = top-down rows)
         w = int.from_bytes(b[18:22], "little", signed=True)
         h = int.from_bytes(b[22:26], "little", signed=True)
-        return ("bmp", abs(w), abs(h))
+        return _int32_dims("bmp", abs(w), abs(h))
     if b[:2] == b"\xff\xd8":
         # walk marker segments to the first SOFn (dimensions live there)
         o, n = 2, len(b)

@@ -398,33 +398,22 @@ def ann_near_dup_pairs(
     # PAIR (~candidates/rows times per row; 45k candidates at sf0.1).
     # Bit-identical: norm_sq over the same row is the same double, so
     # try_divide(dot, sqrt(nsq_x*nsq_y)) reproduces cosine() exactly.
-    if n_tables == 1:
-        sig = lsh_hyperplane_sig(vec_col, n_planes, dim)
-        base = df.select(
+    sigs = F.array(
+        *[
+            lsh_hyperplane_sig(vec_col, n_planes, dim, plane_offset=t * n_planes)
+            for t in range(n_tables)
+        ]
+    )
+    base = (
+        df.select(
             F.col(id_col).alias("id"),
             F.col(vec_col).alias("v"),
             norm_sq(F.col(vec_col)).alias("nsq"),
-            sig.alias("bucket"),
-        ).persist()
-    else:
-        sigs = F.array(
-            *[
-                lsh_hyperplane_sig(vec_col, n_planes, dim, plane_offset=t * n_planes)
-                for t in range(n_tables)
-            ]
+            sigs.alias("__sigs"),
         )
-        base = (
-            df.select(
-                F.col(id_col).alias("id"),
-                F.col(vec_col).alias("v"),
-                norm_sq(F.col(vec_col)).alias("nsq"),
-                sigs.alias("__sigs"),
-            )
-            .select(
-                "id", "v", "nsq", F.posexplode("__sigs").alias("tbl", "bucket")
-            )
-            .persist()
-        )
+        .select("id", "v", "nsq", F.posexplode("__sigs").alias("tbl", "bucket"))
+        .persist()
+    )
     # price the LARGEST relation Catalyst might pick as the broadcast
     # build side: posexplode multiplies the persisted base by n_tables,
     # and multi-probe fans the left side (n_planes+1)× — without these
@@ -441,18 +430,17 @@ def ann_near_dup_pairs(
             F.col("bucket"),
             *[F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(n_planes)],
         )
-        keep = ["id", "v", "nsq"] + (["tbl"] if n_tables > 1 else [])
-        left = base.select(*keep, F.explode(probes).alias("bucket"))
+        left = base.select("id", "v", "nsq", "tbl", F.explode(probes).alias("bucket"))
     if not small:
         left = left.hint("merge")
         base = base.hint("merge")
     x = left.alias("x")
     y = base.alias("y")
-    cond = (F.col("x.bucket") == F.col("y.bucket")) & (
-        F.col("x.id") < F.col("y.id")
+    cond = (
+        (F.col("x.bucket") == F.col("y.bucket"))
+        & (F.col("x.tbl") == F.col("y.tbl"))
+        & (F.col("x.id") < F.col("y.id"))
     )
-    if n_tables > 1:
-        cond = cond & (F.col("x.tbl") == F.col("y.tbl"))
     out = (
         x.join(y, cond)
         .withColumn(
@@ -593,6 +581,26 @@ def _argmax_assign(scored: DataFrame, out_id_col: str) -> DataFrame:
     )
 
 
+def _centroids_own_clusters(
+    assigned: DataFrame, id_col: str, centroids: list
+) -> DataFrame:
+    """The iters=0 convention: unrefined centroids are data rows
+    scored in 'all' mode (self excluded), so their nearest non-self
+    centroid wins the argmax, but a centroid belongs to its own
+    cluster by definition. Keyed on MEMBERSHIP in the centroid id set,
+    never on ``id < n_centroids``: an out-of-corpus query whose id
+    merely falls below n_centroids (sparse ids, or a corpus smaller
+    than n_centroids) is not a centroid and keeps its vector-nearest
+    assignment."""
+    cids = [int(cid) for cid, _ in centroids]
+    return assigned.withColumn(
+        "cluster",
+        F.when(
+            F.col(id_col).isin(cids) if cids else F.lit(False), F.col(id_col)
+        ).otherwise(F.col("cluster")),
+    )
+
+
 def _ivf_scored_assign(
     df: DataFrame,
     id_col: str,
@@ -605,9 +613,8 @@ def _ivf_scored_assign(
     optionally Lloyd-refined), one kernel pass scoring every vector
     against the centroids, and the nearest-centroid assignment.
 
-    Returns ``(centroids, mode, scored, assigned)`` where ``scored``
-    is the raw (d1, d2, cos_raw) frame (probe selection reuses it) and
-    ``assigned`` is (id_col, cluster).
+    Returns ``(centroids, mode, assigned)`` where ``assigned`` is
+    (id_col, cluster).
     """
     from etl_work_flow_for_big_data_spark.functions.kernels import pairwise_cosine
 
@@ -623,16 +630,53 @@ def _ivf_scored_assign(
     scored = pairwise_cosine(df, id_col, vec_col, centroids, mode=mode)
     assigned = _argmax_assign(scored, id_col)
     if not kmeans_iters:
-        # unrefined centroids are data rows scored in 'all' mode (self
-        # excluded): nearest non-self wins above, but a centroid
-        # belongs to its own cluster by definition
-        assigned = assigned.withColumn(
-            "cluster",
-            F.when(F.col(id_col) < n_centroids, F.col(id_col)).otherwise(
-                F.col("cluster")
-            ),
-        )
-    return centroids, mode, scored, assigned
+        assigned = _centroids_own_clusters(assigned, id_col, centroids)
+    return centroids, mode, assigned
+
+
+def _probe_clusters(
+    scored: DataFrame | None, assigned: DataFrame, id_col: str, nprobe: int
+) -> DataFrame:
+    """(id_col, cluster) rows naming every cluster a query searches:
+    its assigned cluster, plus its top-``nprobe`` clusters by centroid
+    cosine when ``nprobe > 1``. The union keeps the assigned cluster
+    (identical at iters>0; at iters=0 a query that IS a centroid owns
+    its cluster while its self-score is excluded from ``scored``).
+    ``scored`` is the query rows' (d1, d2, cos_raw) kernel pass and is
+    read only when ``nprobe > 1``."""
+    if nprobe == 1:
+        return assigned
+    probes = (
+        scored.withColumn("__rn", F.row_number().over(_ivf_assign_window()))
+        .filter(F.col("__rn") <= nprobe)
+        .select(F.col("d1").alias(id_col), F.col("d2").alias("cluster"))
+    )
+    return probes.union(assigned).distinct()
+
+
+def _ivf_search(
+    c: DataFrame,
+    q_src: DataFrame,
+    q_clusters: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+) -> DataFrame:
+    """Shared IVF tail: join each query vector to the clusters it
+    probes, equi-join the (broadcast, dim-table-sized) query side to
+    the corpus postings ``c`` (c_vec_id, c_vec, cluster) on cluster
+    id, score with the exact rounded cosine and keep the top ``k``."""
+    q = q_src.join(q_clusters, id_col).select(
+        F.col(id_col).alias("q_vec_id"),
+        F.col(vec_col).alias("q_vec"),
+        F.col("cluster"),
+    )
+    pairs = (
+        c.join(F.broadcast(q), "cluster")
+        .filter(F.col("q_vec_id") != F.col("c_vec_id"))
+        .withColumn("cos_sim", F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6))
+    )
+    return _top_k(pairs, k)
 
 
 def ivf_topk(
@@ -680,83 +724,39 @@ def ivf_topk(
     """
     if nprobe < 1:
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-    centroids, mode, scored, assigned = _ivf_scored_assign(
+    centroids, mode, assigned = _ivf_scored_assign(
         df, id_col, vec_col, n_centroids, kmeans_iters
     )
     # persist: `assigned` feeds BOTH sides of the cluster equi-join (q
-    # and c derive from `vecs`); without it the full-corpus kernel
+    # and c derive from it); without it the full-corpus kernel
     # pass + assignment window re-planned per side (2 MapInPandas
     # nodes at nprobe=1, 3 at nprobe=2 — plan-verified, r14). The
     # persisted frame is (id, cluster) — two narrow columns per corpus
     # row, the in-memory inverted file; ContextCleaner releases it
     # like every other operator persist here.
     assigned = assigned.persist()
-    w_assign = _ivf_assign_window()
-    vecs = df.select(F.col(id_col), F.col(vec_col)).join(assigned, id_col)
+    vecs = df.select(F.col(id_col), F.col(vec_col))
+    q_src = vecs.filter(F.col(id_col).isin(query_ids))
+    # r14: the query-side probe ranking is a kernel pass over ONLY the
+    # query rows — filtering d1 AFTER the corpus-wide kernel cannot
+    # push through the opaque mapInPandas, so it re-ran the full pass
+    # just to rank 5 queries (bit-identical rows either way).
+    scored = None
     if nprobe > 1:
-        # top-nprobe clusters per query by centroid cosine, UNION the
-        # assigned cluster (identical at iters>0; at iters=0 a query
-        # that IS a centroid owns its cluster by convention while its
-        # self-score is excluded from `scored`). r14: scored per-row
-        # values are independent rows, so the query-side ranking is
-        # computed from a kernel pass over ONLY the query rows —
-        # filtering d1 AFTER the kernel cannot push through the opaque
-        # mapInPandas, so `scored.filter(d1.isin(...))` re-ran the
-        # full-corpus pass just to rank 5 queries (bit-identical rows
-        # either way; the corpus-wide `scored` still feeds assignment).
         from etl_work_flow_for_big_data_spark.functions.kernels import (
             pairwise_cosine,
         )
 
-        q_scored = pairwise_cosine(
-            df.filter(F.col(id_col).isin(query_ids)),
-            id_col,
-            vec_col,
-            centroids,
-            mode=mode,
-        )
-        probes = (
-            q_scored
-            .withColumn("__rn", F.row_number().over(w_assign))
-            .filter(F.col("__rn") <= nprobe)
-            .select(F.col("d1").alias(id_col), F.col("d2").alias("cluster"))
-        )
-        q_clusters = (
-            probes.union(assigned.filter(F.col(id_col).isin(query_ids)))
-            .distinct()
-        )
-        q = (
-            df.select(F.col(id_col), F.col(vec_col))
-            .filter(F.col(id_col).isin(query_ids))
-            .join(q_clusters, id_col)
-            .select(
-                F.col(id_col).alias("q_vec_id"),
-                F.col(vec_col).alias("q_vec"),
-                F.col("cluster"),
-            )
-        )
-    else:
-        q = (
-            vecs.filter(F.col(id_col).isin(query_ids))
-            .select(
-                F.col(id_col).alias("q_vec_id"),
-                F.col(vec_col).alias("q_vec"),
-                F.col("cluster"),
-            )
-        )
-    c = vecs.select(
+        scored = pairwise_cosine(q_src, id_col, vec_col, centroids, mode=mode)
+    q_clusters = _probe_clusters(
+        scored, assigned.filter(F.col(id_col).isin(query_ids)), id_col, nprobe
+    )
+    c = vecs.join(assigned, id_col).select(
         F.col(id_col).alias("c_vec_id"),
         F.col(vec_col).alias("c_vec"),
         F.col("cluster"),
     )
-    from etl_work_flow_for_big_data_spark.functions.vectors import cosine
-
-    pairs = (
-        c.join(F.broadcast(q), "cluster")
-        .filter(F.col("q_vec_id") != F.col("c_vec_id"))
-        .withColumn("cos_sim", F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6))
-    )
-    return _top_k(pairs, k)
+    return _ivf_search(c, q_src, q_clusters, id_col, vec_col, k)
 
 
 def ivf_build(
@@ -794,7 +794,7 @@ def ivf_build(
     ≡ ``ivf_topk`` for in-corpus queries — pinned in
     tests/test_ivf_persisted.py.
     """
-    centroids, mode, _scored, assigned = _ivf_scored_assign(
+    centroids, mode, assigned = _ivf_scored_assign(
         df, id_col, vec_col, n_centroids, kmeans_iters
     )
     spark = df.sparkSession
@@ -877,33 +877,37 @@ def ivf_build(
 _IVF_SIDECAR_CACHE: dict[str, tuple] = {}
 
 
-def _sidecar_fingerprint(index_path: str) -> tuple:
+def _stat_fingerprint(root: str) -> tuple:
+    """(path, mtime_ns, size) of every file under ``root`` (or of
+    ``root`` itself when it is a file) — a filesystem stat walk, no
+    data scan, that changes with any rewrite. Empty when ``root`` does
+    not exist locally (e.g. a non-local filesystem path)."""
     import os
 
+    if os.path.isfile(root):
+        st = os.stat(root)
+        return ((root, st.st_mtime_ns, st.st_size),)
     sig: list[tuple] = []
-    for sub in ("meta", "centroids"):
-        root = f"{index_path}/{sub}"
-        if os.path.isdir(root):
-            for dirpath, _dirs, names in sorted(os.walk(root)):
-                for nm in sorted(names):
-                    p = os.path.join(dirpath, nm)
-                    try:
-                        st = os.stat(p)
-                    except OSError:
-                        continue
-                    sig.append((p, st.st_mtime_ns, st.st_size))
-        else:
-            # non-local filesystem (no stat walk possible) — return a
-            # sentinel the caller treats as "never cache"
-            return ()
+    for dirpath, _dirs, names in sorted(os.walk(root)):
+        for nm in sorted(names):
+            p = os.path.join(dirpath, nm)
+            try:
+                st = os.stat(p)
+            except OSError:
+                continue
+            sig.append((p, st.st_mtime_ns, st.st_size))
     return tuple(sig)
 
 
 def _read_sidecars(spark, index_path: str):
     """meta row + centroid list for an index, cached per process keyed
     on the sidecar files' fingerprint (see _IVF_SIDECAR_CACHE)."""
-    fp = _sidecar_fingerprint(index_path)
-    if fp:
+    fp = tuple(
+        _stat_fingerprint(f"{index_path}/{sub}") for sub in ("meta", "centroids")
+    )
+    # a sidecar with no local files (non-local filesystem) is never cached
+    cacheable = all(fp)
+    if cacheable:
         hit = _IVF_SIDECAR_CACHE.get(index_path)
         if hit is not None and hit[0] == fp:
             return hit[1], hit[2]
@@ -912,7 +916,7 @@ def _read_sidecars(spark, index_path: str):
         (r["cid"], list(r["cvec"]))
         for r in spark.read.parquet(f"{index_path}/centroids").collect()
     ]
-    if fp:
+    if cacheable:
         _IVF_SIDECAR_CACHE[index_path] = (fp, meta, centroids)
     return meta, centroids
 
@@ -963,11 +967,8 @@ def ivf_query(
     plus the top-``nprobe`` centroid clusters when ``nprobe > 1``.
     Out-of-corpus query vectors work too (their "assigned" cluster is
     simply the nearest centroid) — that case has no one-shot
-    equivalent, so the parity pin covers in-corpus ids. The
-    owns-itself override keys on MEMBERSHIP in the persisted centroid
-    id set, not ``id < n_centroids`` (r11 advice): an out-of-corpus
-    query whose id merely falls below n_centroids must assign by its
-    VECTOR, never be forced to a cluster its id happens to name. Id
+    equivalent, so the parity pin covers in-corpus ids (the
+    owns-itself rule is :func:`_centroids_own_clusters`). Id
     collision remains the one contract the caller owns — ids are the
     join identity throughout (here and in the self-pair exclusion),
     so a query batch must not reuse an in-corpus id for a different
@@ -977,39 +978,17 @@ def ivf_query(
     if nprobe < 1:
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
     from etl_work_flow_for_big_data_spark.functions.kernels import pairwise_cosine
-    from etl_work_flow_for_big_data_spark.functions.vectors import cosine
 
     meta, centroids = _read_sidecars(spark, index_path)
     q_src = queries.select(F.col(id_col), F.col(vec_col))
     scored = pairwise_cosine(q_src, id_col, vec_col, centroids, mode=meta["mode"])
     assigned = _argmax_assign(scored, id_col)
     if not meta["kmeans_iters"]:
-        # the build's centroid-owns-itself convention (see
-        # _ivf_scored_assign) — recomputed, not joined from postings,
-        # so out-of-corpus queries assign uniformly; for in-corpus ids
-        # the deterministic ranking makes both routes identical. Keyed
-        # on the PERSISTED centroid id set: at build time the centroids
-        # are exactly the corpus rows with id < n_centroids, so for a
-        # sparse-id corpus (or one smaller than n_centroids) an
-        # out-of-corpus query id below n_centroids is NOT a centroid
-        # and must keep its vector-nearest assignment.
-        cids = [int(cid) for cid, _ in centroids]
-        assigned = assigned.withColumn(
-            "cluster",
-            F.when(
-                F.col(id_col).isin(cids) if cids else F.lit(False),
-                F.col(id_col),
-            ).otherwise(F.col("cluster")),
-        )
-    if nprobe > 1:
-        probes = (
-            scored.withColumn("__rn", F.row_number().over(_ivf_assign_window()))
-            .filter(F.col("__rn") <= nprobe)
-            .select(F.col("d1").alias(id_col), F.col("d2").alias("cluster"))
-        )
-        q_clusters = probes.union(assigned).distinct()
-    else:
-        q_clusters = assigned
+        # recomputed, not joined from postings, so out-of-corpus
+        # queries assign uniformly; for in-corpus ids the
+        # deterministic ranking makes both routes identical
+        assigned = _centroids_own_clusters(assigned, id_col, centroids)
+    q_clusters = _probe_clusters(scored, assigned, id_col, nprobe)
     # The probe set is driver-sized by contract (query batches are
     # dim-table-sized, ≤ |queries| × (nprobe+1) rows), so it is
     # collected ONCE and re-enters the final plan as a literal local
@@ -1022,11 +1001,6 @@ def ivf_query(
     probe_ids = sorted({r["cluster"] for r in pairs_rows})
     q_assign = spark.createDataFrame(
         [(r[0], r[1]) for r in pairs_rows], q_clusters.schema
-    )
-    q = q_src.join(q_assign, id_col).select(
-        F.col(id_col).alias("q_vec_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col("cluster"),
     )
     c = (
         spark.read.schema(_postings_schema(meta))
@@ -1042,9 +1016,4 @@ def ivf_query(
             F.col("cluster"),
         )
     )
-    pairs = (
-        c.join(F.broadcast(q), "cluster")
-        .filter(F.col("q_vec_id") != F.col("c_vec_id"))
-        .withColumn("cos_sim", F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6))
-    )
-    return _top_k(pairs, k)
+    return _ivf_search(c, q_src, q_assign, id_col, vec_col, k)

@@ -237,7 +237,6 @@ def distributed_ntile(
     n_buckets: int,
     out_col: str = "ntile",
     n_parts: int | None = None,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Exact ``NTILE(n) OVER (ORDER BY order_cols)`` without a
     single-partition sort — the scale-safe global quantile binning.
@@ -251,42 +250,32 @@ def distributed_ntile(
 
     The subtle requirement is that the per-range COUNTS and the final
     WINDOW must describe the exact same row→range assignment across
-    two separate jobs. Two strategies, chosen by ``strategy``:
+    two separate jobs. The type of the leading order key picks one of
+    two ways to fix that assignment:
 
-    - ``"split_points"`` (numeric first order key only): range split
-      points come from one ``approxQuantile`` pass and are LITERALIZED
-      into the assignment expression (``count of split points < key``)
-      — both jobs share the literals, so assignment is deterministic
-      by construction and NOTHING is materialized. Ties on a split
-      value land in one range (tie-break columns order them inside the
-      window); skewed hot values bound a range's size exactly like
-      they bound a sort partition. Cost: one quantile pass + ONE
-      ranking job whose broadcast subtree computes the per-range
-      counts/offsets/total (r6 fusion — no separate counts-collect
-      job; A/B med-of-5 same session at sf0.1: fused 1.61 s vs
-      collect 1.83 s).
-    - ``"checkpoint"``: ``repartitionByRange`` (sampled,
+    - numeric leading key: range split points come from one
+      ``approxQuantile`` pass and are LITERALIZED into the assignment
+      expression (``count of split points < key``) — both jobs share
+      the literals, so assignment is deterministic by construction and
+      NOTHING is materialized. Ties on a split value land in one range
+      (tie-break columns order them inside the window); skewed hot
+      values bound a range's size exactly like they bound a sort
+      partition. Cost: one quantile pass + ONE ranking job whose
+      broadcast subtree computes the per-range counts/offsets/total.
+    - any other orderable key: ``repartitionByRange`` (sampled,
       nondeterministic boundaries) frozen by ONE eager
       localCheckpoint so both downstream reads see the same
-      assignment. Works for any orderable key type, but materializes
-      the dataset — fine below memory scale, ruinous at 100 TB.
-    - ``"auto"`` (default): split points whenever the leading order
-      key is numeric; checkpoint only as the non-numeric-key fallback
-      (at true scale give the operator a numeric or dictionary-encoded
-      leading key). Measured honestly at sf0.1 (med-of-5, one
-      session): split_points 1.45 s, checkpoint 1.19 s, and a fused
-      variant that computes offsets as a lazy broadcast plan 1.43 s —
-      all within noise of each other, all bounded below by the three
-      inherently sequential passes (sample, count, rank), each a
-      ~0.3 s job at local[32]. The 0.39 s r2 figure belonged to the
-      single-partition global sort this operator exists to avoid: at
-      100 TB that funnels the corpus through one task, while
-      split_points materializes nothing and touches the data exactly
-      three times. Auto prefers split_points despite the local 0.26 s
-      checkpoint edge because checkpoint's localCheckpoint
-      materializes the full input — free at sf0.1, ruinous at scale —
-      and a size-based switch would need private plan-stats APIs for
-      an operator that accepts arbitrary DataFrames, not tables.
+      assignment. This materializes the dataset — fine below memory
+      scale, ruinous at 100 TB, so at true scale give the operator a
+      numeric or dictionary-encoded leading key.
+
+    Measured at sf0.1 (med-of-5, one session) the two ways ran 1.45 s
+    (split points) and 1.19 s (checkpoint), both bounded below by the
+    three inherently sequential passes (sample, count, rank). Numeric
+    keys take split points despite that local edge because the
+    checkpoint materializes the full input, and a size-based switch
+    would need private plan-stats APIs for an operator that accepts
+    arbitrary DataFrames, not tables.
 
     ``order_cols`` must be a total order (add a unique tie-break
     column) or ranks — and thus buckets — are nondeterministic at
@@ -294,8 +283,6 @@ def distributed_ntile(
     """
     if n_buckets <= 0:
         raise ValueError(f"n_buckets must be positive, got {n_buckets}")
-    if strategy not in ("auto", "checkpoint", "split_points"):
-        raise ValueError(f"unknown strategy {strategy!r}")
     # the operator adds working columns under these names; an input
     # that already carries one would silently corrupt ranks (or raise
     # an ambiguous-reference error deep in the plan) — fail loudly at
@@ -318,17 +305,7 @@ def distributed_ntile(
     first_col = (
         order_cols[0] if not isinstance(order_cols[0], str) else F.col(order_cols[0])
     )
-    first_numeric = isinstance(df.select(first_col).schema[0].dataType, NumericType)
-    if strategy == "auto":
-        strategy = "split_points" if first_numeric else "checkpoint"
-    if strategy == "split_points" and not first_numeric:
-        raise ValueError(
-            "split_points strategy needs a numeric leading order column "
-            "(split points are literalized doubles); use checkpoint or "
-            "add a numeric sort key"
-        )
-
-    if strategy == "split_points":
+    if isinstance(df.select(first_col).schema[0].dataType, NumericType):
         import math
 
         keyed = df.withColumn("__k0", first_col.cast("double"))

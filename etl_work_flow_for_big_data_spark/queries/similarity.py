@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from etl_work_flow_for_big_data_spark.catalog import load_table
 from etl_work_flow_for_big_data_spark.operators.similarity import (
+    _stat_fingerprint,
     ann_lsh_topk,
     cosine_pairs,
     topk_cosine,
@@ -577,31 +578,15 @@ def _cached_ivf_index(e, sf_dir: str, variant: str, **build_kwargs) -> str:
 
 
 def _embeddings_fingerprint(sf_dir: str) -> tuple:
-    """Cache key for the persisted-IVF index: (sf_dir, mtime+size of
-    every file under the embeddings table). Keying on sf_dir alone
-    served a STALE index when an in-process fixture regenerated the
-    table at the same path (r11 advice) — the fingerprint changes with
-    any rewrite, so regeneration transparently triggers a rebuild. A
-    filesystem stat walk, no data scan; local paths only (the oracled
-    queries read the local test fixture — a durable-index deployment
-    manages rebuilds explicitly, see the sim_ivf_persisted docstring)."""
-    import os
-
-    root = os.path.join(sf_dir, "embeddings.parquet")
-    sig: list[tuple] = []
-    if os.path.isfile(root):
-        st = os.stat(root)
-        sig.append((root, st.st_mtime_ns, st.st_size))
-    elif os.path.isdir(root):
-        for dirpath, _dirs, names in sorted(os.walk(root)):
-            for n in sorted(names):
-                p = os.path.join(dirpath, n)
-                try:
-                    st = os.stat(p)
-                except OSError:
-                    continue
-                sig.append((p, st.st_mtime_ns, st.st_size))
-    return (sf_dir, tuple(sig))
+    """Cache key for the persisted-IVF index: the stat fingerprint of
+    the embeddings table. Keying on sf_dir alone served a STALE index
+    when an in-process fixture regenerated the table at the same path
+    (r11 advice) — the fingerprint changes with any rewrite, so
+    regeneration transparently triggers a rebuild. Local paths only
+    (the oracled queries read the local test fixture — a durable-index
+    deployment manages rebuilds explicitly, see the sim_ivf_persisted
+    docstring)."""
+    return _stat_fingerprint(f"{sf_dir}/embeddings.parquet")
 
 
 @query(

@@ -3,9 +3,11 @@ of the streaming G7 semantics (SURVEY.md §2.G): tumbling, sliding and
 session windows, plus content-based/round-robin routing assignment
 (§2.F F1/F3) expressed declaratively.
 
-The same window builders run under Structured Streaming with
-watermarks (see streaming/windows.py); batch execution here is what
-makes them oracle-checkable.
+``window_tumbling`` is built on the streaming builder
+``streaming.windows.tumbling_agg``, so the batch query and the stream
+share one plan; Catalyst drops the watermark from a batch plan, and
+batch execution here is what makes the builder oracle-checkable. The
+sliding and session windows are batch-only.
 """
 
 from __future__ import annotations
@@ -15,6 +17,7 @@ from pyspark.sql import functions as F
 
 from etl_work_flow_for_big_data_spark.catalog import load_table
 from etl_work_flow_for_big_data_spark.queries import query
+from etl_work_flow_for_big_data_spark.streaming.windows import tumbling_agg
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
@@ -33,24 +36,18 @@ _TS_FMT = "yyyy-MM-dd HH:mm:ss"
     """,
     doc="G7 tumbling event-time window (1h): Spark window() aligns to "
     "epoch, so 1h-tumbling == date_trunc('hour') in the oracle. "
-    "Streaming twin adds withWatermark — same plan shape. NULL-ts "
+    "Built on the streaming tumbling_agg; its withWatermark is dropped "
+    "from the batch plan. NULL-ts "
     "events are windowless: Spark's window() drops them implicitly; "
     "the oracle filters explicitly.",
 )
 def window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.date_format("w.start", _TS_FMT).alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
+    return tumbling_agg(ev, keys=["event_type"]).select(
+        F.date_format("window_start", _TS_FMT).alias("window_start"),
+        "event_type",
+        "n_events",
+        "total_value",
     )
 
 

@@ -68,7 +68,6 @@ def process_incremental(
     ledger: FileLedger,
     process: Callable[[DataFrame, str], None],
     fmt: str = "text",
-    backup_first: bool = True,
     **read_opts,
 ) -> list[str]:
     """Process each new file in the landing zone exactly once.
@@ -76,13 +75,12 @@ def process_incremental(
     Lists the landing dir, skips files with markers, runs ``process``
     per file (receiving the file's DataFrame and its path), and marks
     the file done only after ``process`` returns — a crash leaves no
-    marker, so the file is retried next run. ``backup_first`` performs
-    the reference's Dir1→Dir2 copy before touching anything.
+    marker, so the file is retried next run. The reference's Dir1→Dir2
+    recovery copy is taken before anything is touched.
     Returns the files processed this run (in sorted order, so runs are
     deterministic).
     """
-    if backup_first:
-        ledger.backup()
+    ledger.backup()
     from etl_work_flow_for_big_data_spark.sources.registry import DEFAULT
 
     processed = []

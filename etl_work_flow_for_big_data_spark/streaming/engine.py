@@ -158,24 +158,16 @@ class PipelineManager:
                 elif entry[0] == "a":
                     action = entry[2:]
             start = end + 1
-        if sid is None or not action:
+        if sid is None or action not in (ACTION_START, ACTION_STOP, ACTION_RESTART):
             return "invalid-packet"
-        if action == ACTION_START:
-            name = id_to_name.get(sid)
-            if name is None or name not in self._pipelines:
-                return "invalid-id"
-            self.start(name)
+        if sid == 0 and action != ACTION_START:
+            self.control(action, None)
             return "dispatched"
-        if action in (ACTION_STOP, ACTION_RESTART):
-            if sid == 0:
-                self.control(action, None)
-                return "dispatched"
-            name = id_to_name.get(sid)
-            if name is None or name not in self._pipelines:
-                return "invalid-id"
-            self.control(action, name)
-            return "dispatched"
-        return "invalid-packet"
+        name = id_to_name.get(sid)
+        if name is None or name not in self._pipelines:
+            return "invalid-id"
+        self.control(action, name)
+        return "dispatched"
 
     # -- supervision (G4) ----------------------------------------------
     def check_once(self) -> list[str]:

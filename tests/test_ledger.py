@@ -61,13 +61,11 @@ def test_backup_restore_rolls_ledger_back(spark, landing, tmp_path):
     process_incremental(spark, str(landing), ledger, lambda df, p: None, fmt="kv_text")
     ledger.backup()
     (landing / "c.cdr").write_text("s=3\n")
-    process_incremental(
-        spark, str(landing), ledger, lambda df, p: None, fmt="kv_text", backup_first=False
-    )
+    process_incremental(spark, str(landing), ledger, lambda df, p: None, fmt="kv_text")
     assert ledger.done_files() == {"a.cdr", "b.cdr", "c.cdr"}
     # roll back to the pre-c state: c.cdr becomes eligible again
     ledger.restore()
     assert ledger.done_files() == {"a.cdr", "b.cdr"}
     assert process_incremental(
-        spark, str(landing), ledger, lambda df, p: None, fmt="kv_text", backup_first=False
+        spark, str(landing), ledger, lambda df, p: None, fmt="kv_text"
     ) == ["c.cdr"]

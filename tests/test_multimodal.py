@@ -240,6 +240,24 @@ def test_decode_media_parses_headers(spark):
     )
 
 
+@pytest.mark.parametrize(
+    "fmt,payload",
+    [
+        ("png", _png(0xFFFFFFFF, 1)[:24]),  # width 2^32-1, 24-byte IHDR
+        ("bmp", _bmp(1, 2**31)),  # height field -2^31
+    ],
+    ids=["png", "bmp"],
+)
+def test_decode_media_out_of_int32_dims_are_null(spark, fmt, payload):
+    """A header dimension the int width/height columns cannot hold is
+    a corrupt record: one row with null dims, never a task failure."""
+    df = spark.createDataFrame([(1, payload)], "doc_id long, content binary")
+    rows = decode_media(df, "doc_id").collect()
+    assert [(r["format"], r["width"], r["height"], r["n_bytes"]) for r in rows] == [
+        (fmt, None, None, len(payload))
+    ]
+
+
 def test_jpeg_walk_progressive_and_exif_variants():
     """The two most common real-world JPEG shapes beyond baseline JFIF:
     progressive encoding (SOF2 instead of SOF0) and an EXIF preamble

@@ -467,7 +467,6 @@ def test_distributed_ntile_fast_path_adversarial_keys(spark):
             4,
             out_col="q",
             n_parts=5,
-            strategy="split_points",
         ).collect()
     }
     assert got == want
@@ -487,7 +486,6 @@ def test_distributed_ntile_fast_path_adversarial_keys(spark):
             3,
             out_col="q",
             n_parts=4,
-            strategy="split_points",
         ).collect()
     }
     assert got_c == want_c
@@ -507,8 +505,7 @@ def test_distributed_ntile_fast_path_no_materialization(spark):
         "id", (F.col("id") % 13).cast("double").alias("v")
     )
     out = distributed_ntile(
-        df, [F.col("v"), F.col("id")], 4, out_col="q", n_parts=4,
-        strategy="split_points",
+        df, [F.col("v"), F.col("id")], 4, out_col="q", n_parts=4
     )
     optimized = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Range (0, 100" in optimized, optimized
@@ -529,7 +526,7 @@ def test_join_salted_spreads_hot_key(spark, sf_dir):
 def test_distributed_ntile_fast_path_edge_inputs(spark):
     """Edge inputs the split-points strategy must survive: plain string
     order columns, ±inf keys (no SQL literal for inf — splits filtered
-    to finite, keys compare correctly), and explicit split_points with
+    to finite, keys compare correctly), and split points with
     n_parts=1 (degenerate single range, still no materialization)."""
     from pyspark.sql import Window as W
 
@@ -540,7 +537,7 @@ def test_distributed_ntile_fast_path_edge_inputs(spark):
     df = spark.range(50).select("id", (F.col("id") % 7).cast("double").alias("v"))
     assert (
         distributed_ntile(
-            df, ["v", "id"], 4, out_col="q", n_parts=4, strategy="split_points"
+            df, ["v", "id"], 4, out_col="q", n_parts=4
         ).count()
         == 50
     )
@@ -558,15 +555,13 @@ def test_distributed_ntile_fast_path_edge_inputs(spark):
     got = {
         (r.id, r.q)
         for r in distributed_ntile(
-            inf, [F.col("v"), F.col("id")], 3, out_col="q", n_parts=3,
-            strategy="split_points",
+            inf, [F.col("v"), F.col("id")], 3, out_col="q", n_parts=3
         ).collect()
     }
     assert got == want
 
     one = distributed_ntile(
-        df, [F.col("v"), F.col("id")], 4, out_col="q", n_parts=1,
-        strategy="split_points",
+        df, [F.col("v"), F.col("id")], 4, out_col="q", n_parts=1
     )
     assert "Range (0, 50" in one._jdf.queryExecution().optimizedPlan().toString()
     assert one.count() == 50
@@ -637,6 +632,32 @@ def test_distributed_ntile_property_random_inputs(spark):
             ).collect()
         }
         assert got == want, f"case n={n_rows} k={k} parts={n_parts}"
+
+
+def test_distributed_ntile_string_key_matches_global_ntile(spark):
+    """A non-numeric leading key has no split-point literals, so the
+    operator takes the range-partition + localCheckpoint path. It must
+    still equal NTILE(k) OVER (ORDER BY k, id) with ties on the string
+    key and a NULL key (nulls first ascending)."""
+    from pyspark.sql import Window as W
+
+    from etl_work_flow_for_big_data_spark.operators.transforms import (
+        distributed_ntile,
+    )
+
+    keys = ["b"] * 6 + [None, None] + ["a", "c", "d", "a", "e", "zz", ""]
+    df = spark.createDataFrame(list(enumerate(keys)), "id long, k string")
+    want = {
+        (r.id, r.q)
+        for r in df.select(
+            "id", F.ntile(4).over(W.orderBy("k", "id")).alias("q")
+        ).collect()
+    }
+    got = {
+        (r.id, r.q)
+        for r in distributed_ntile(df, ["k", "id"], 4, out_col="q", n_parts=3).collect()
+    }
+    assert got == want
 
 
 # ---------------------------------------------------------------------------

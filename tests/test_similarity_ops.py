@@ -222,7 +222,7 @@ class TestKmeansRefine:
         )
 
         def labels():
-            _, _, _, assigned = _ivf_scored_assign(
+            _, _, assigned = _ivf_scored_assign(
                 two_clusters, "vec_id", "embedding",
                 n_centroids=2, kmeans_iters=0,
             )
