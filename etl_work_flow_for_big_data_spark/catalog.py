@@ -10,6 +10,8 @@ pushes it into the scan).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = [
@@ -98,46 +100,28 @@ def _drifted_schema(path: str):
     fallback that turns "random file wins" nondeterminism into a
     deterministic widest-union contract.
     """
-    import os
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     if not os.path.isdir(path):
         return None
     try:
-        # os.walk, not listdir: nested layouts (multi-job output dirs,
-        # compaction subfolders) keep data files below the top level,
-        # and a drift seam between subdirectories is the same
-        # nondeterministic random-footer-wins read this function
-        # exists to prevent. Hidden/metadata files (_SUCCESS, .crc,
-        # _delta_log contents) are skipped at every level. Hive-style
-        # partition directories (a `key=value` path component) bail to
-        # default inference instead: partition columns live in the
-        # directory names, not the footers, so an explicit
-        # footer-union schema would silently DROP them from the scan —
-        # worse than the drift it fixes. (Declared-schema reads remain
-        # the production answer for partitioned lakes.)
-        files: list[str] = []
-        for root, dirs, names in os.walk(path):
-            # prune hidden/metadata subtrees BEFORE the hive-layout
-            # test (r11 advice): a key=value path nested inside e.g.
-            # _delta_log is metadata, not a partitioned table, and must
-            # not abort drift resolution for the whole directory —
-            # in-place pruning also stops os.walk descending them at all
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            parts = [p for p in os.path.relpath(root, path).split(os.sep)
-                     if p and p != "."]
-            if any(p.startswith(("_", ".")) for p in parts):
-                continue
-            if any("=" in p for p in parts):
-                return None
-            files.extend(
-                os.path.join(root, f)
-                for f in names
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            )
-        files.sort()
+        # nested layouts (multi-job output dirs, compaction subfolders)
+        # keep data files below the top level, and a drift seam between
+        # subdirectories is the same nondeterministic random-footer-wins
+        # read this function exists to prevent. Hive-style partition
+        # directories (a `key=value` path component) bail to default
+        # inference instead: partition columns live in the directory
+        # names, not the footers, so an explicit footer-union schema
+        # would silently DROP them from the scan — worse than the drift
+        # it fixes. (Declared-schema reads remain the production answer
+        # for partitioned lakes.) The listing has already pruned
+        # hidden/metadata subtrees, so a key=value path inside e.g.
+        # _delta_log does not abort resolution (r11 advice).
+        files = _data_files(path)
+        if any("=" in part for f in files
+               for part in os.path.relpath(f, path).split(os.sep)[:-1]):
+            return None
         if len(files) < 2:
             return None
         schemas = [pq.read_schema(f) for f in files]
@@ -152,6 +136,25 @@ def _drifted_schema(path: str):
         return from_arrow_schema(unified)
     except Exception:  # noqa: BLE001 — resolution is best-effort;
         return None  # unreadable/exotic footers fall back to default
+
+
+def _data_files(path: str) -> list[str]:
+    """The parquet files a scan of ``path`` reads, sorted: ``path``
+    itself when it is not a directory; else every ``*.parquet`` at any
+    depth, with hidden/metadata names (a ``_`` or ``.`` prefix:
+    ``_temporary/``, ``_delta_log/``, ``_SUCCESS``, ``.crc``) pruned at
+    every level, as Spark's file index skips them."""
+    if not os.path.isdir(path):
+        return [path]
+    files: list[str] = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        files.extend(
+            os.path.join(root, f)
+            for f in names
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+    return sorted(files)
 
 
 def maybe_broadcast(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
@@ -169,20 +172,10 @@ def maybe_broadcast(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
     filtering/projecting before the hint — the broadcast payload is the
     filtered dim, not the full table.
     """
-    import os
-
     from pyspark.sql import functions as F
 
-    path = f"{sf_dir}/{name}.parquet"
     try:
-        if os.path.isdir(path):
-            size = sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _, files in os.walk(path)
-                for f in files
-            )
-        else:
-            size = os.path.getsize(path)
+        size = sum(map(os.path.getsize, _data_files(f"{sf_dir}/{name}.parquet")))
     except OSError:
         return df  # can't stat (remote/virtual path) — let AQE decide
     return F.broadcast(df) if size <= BROADCAST_MAX_BYTES else df
@@ -213,13 +206,26 @@ def maybe_merge(
     (JVM object + hash-table overhead ≈ 48 B for a narrow key row;
     pass larger for array-carrying rows).
     """
-    try:
-        rows = table_row_count(sf_dir, name)
-    except Exception:  # noqa: BLE001 — unstat-able ⇒ the safe plan
-        return df.hint("merge")
-    if rows * bytes_per_row <= BROADCAST_MAX_BYTES:
+    return _merge_unless_small(df, _footer_rows(sf_dir, name), bytes_per_row)
+
+
+def _merge_unless_small(df: DataFrame, rows: int | None, bytes_per_row: int) -> DataFrame:
+    """The one broadcast-size gate: ``df`` as is when ``rows ×
+    bytes_per_row`` fits ``BROADCAST_MAX_BYTES``, else hinted to
+    sort-merge. ``rows=None`` (the size cannot be stat'ed) takes the
+    scale-safe merge path."""
+    if rows is not None and rows * bytes_per_row <= BROADCAST_MAX_BYTES:
         return df
     return df.hint("merge")
+
+
+def _footer_rows(sf_dir: str, name: str) -> int | None:
+    """:func:`table_row_count`, or None when a footer cannot be read
+    (remote/virtual path, missing or corrupt file)."""
+    try:
+        return table_row_count(sf_dir, name)
+    except Exception:  # noqa: BLE001 — unstat-able ⇒ the caller's safe plan
+        return None
 
 
 def table_row_count(sf_dir: str, name: str) -> int:
@@ -228,20 +234,11 @@ def table_row_count(sf_dir: str, name: str) -> int:
     ``cosine_pairs`` block count) without paying a count() pass.
     Handles both a single parquet file (the fixture shape) and a
     directory dataset (the only shape that exists at scale — per-file
-    footer reads summed, no data read)."""
-    import os
-
+    footer reads summed over the files a scan reads, no data read)."""
     import pyarrow.parquet as pq
 
-    path = f"{sf_dir}/{name}.parquet"
-    if os.path.isdir(path):
-        return sum(
-            pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-            for root, _, files in os.walk(path)
-            for f in files
-            if f.endswith(".parquet")
-        )
-    return pq.ParquetFile(path).metadata.num_rows
+    files = _data_files(f"{sf_dir}/{name}.parquet")
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
 def fan_out(df: DataFrame) -> DataFrame:

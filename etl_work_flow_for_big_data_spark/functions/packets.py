@@ -19,14 +19,25 @@ of ``d_log_level_*`` are not in the repo (headers absent) but the
 "clamp else 31" default (``MFramework.cpp:535-540``) pins
 info..error = 1,2,4,8,16 and alert = 32.
 
-All functions are pure Catalyst expressions (no Python UDFs). The
-parser (two ``regexp_extract_all`` over one entry regex) and the
+This module is the only one that knows the wire format. Besides the
+parser and serializers it holds the line framing of the one-packet-
+per-line transports (``kv_text`` files, single-line kafka bodies):
+``check_sep`` for the substitute separator, ``unframe_line`` for the
+readers and ``frame_map`` — the serializer behind one in-row guard —
+for ``write_kv_text`` and ``kafka_wire_frame``. The control plane's
+packets are parsed on the driver by ``wire_entries``, the Python twin
+of the Catalyst parser over the same entry pattern.
+
+The Column functions are pure Catalyst expressions (no Python UDFs).
+The parser (two ``regexp_extract_all`` over one entry regex) and the
 log-level functions whole-stage-codegen; the serializers sort and join
 through higher-order functions (``transform``/``array_sort`` lambdas),
 which Spark evaluates interpreted inside the generated stage.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -35,15 +46,45 @@ from pyspark.sql import functions as F
 LOG_LEVELS = {1: "I", 2: "D", 4: "W", 8: "C", 16: "E", 32: "A"}
 DEFAULT_GLOBAL_MASK = 31  # MFramework.cpp:535-540
 
-#: One wire entry: single-char key at a line start (``(?m)``), ``=``,
-#: value, TERMINATING ``\n`` — an unterminated tail is dropped, like the
-#: reference's find-loop (MFramework.cpp:1234-1243). ``(?d)``: only
-#: ``\n`` ends a line, so ``\r``/``\u0085``/``\u2028`` stay in keys/values.
-_ENTRY = r"(?md)^(.)=([^\n]*)\n"
+#: One wire entry: single-char key at a line start, ``=``, value,
+#: TERMINATING ``\n`` — an unterminated tail is dropped, like the
+#: reference's find-loop (MFramework.cpp:1234-1243). Spark compiles it
+#: with ``(?md)`` and Python ``re`` with ``re.M``; in both only ``\n``
+#: ends a line for ``.`` and ``^``, so ``\r``/``\u0085``/``\u2028`` stay
+#: in keys and values.
+_ENTRY = r"^(.)=([^\n]*)\n"
+_ENTRY_RE = re.compile(_ENTRY, re.M)
 
 
 def _entry_parts(payload: Column) -> tuple[Column, ...]:
-    return tuple(F.regexp_extract_all(payload, F.lit(_ENTRY), g) for g in (1, 2))
+    return tuple(F.regexp_extract_all(payload, F.lit("(?md)" + _ENTRY), g) for g in (1, 2))
+
+
+def wire_entries(payload: str) -> list[tuple[str, str]]:
+    """Parse one wire packet on the driver: the ``(key, value)``
+    entries in arrival order, exactly what :func:`packet_entries`
+    yields for the same text."""
+    return _ENTRY_RE.findall(payload)
+
+
+def check_sep(sep: str) -> str:
+    """Validate the substitute entry separator of a one-packet-per-line
+    transport. The line swaps ``sep`` and ``\\n`` one for one, so ``sep``
+    is one character, and it is neither ``=`` nor ``\\n`` (either would
+    fuse with the entry syntax and lose entries silently)."""
+    if len(sep) != 1 or sep in "=\n":
+        raise ValueError(
+            f"sep must be exactly one character other than '=' and newline, got {sep!r}"
+        )
+    return sep
+
+
+def unframe_line(line: Column, sep: str) -> Column:
+    """One packet per line → wire text. The line terminator the text
+    reader stripped WAS the final entry's terminator, so it is restored;
+    the parser then consumes only terminated entries, like the
+    reference's find-loop."""
+    return F.concat(F.replace(line, F.lit(check_sep(sep)), F.lit("\n")), F.lit("\n"))
 
 
 def packet_entries(payload: Column) -> Column:
@@ -95,6 +136,46 @@ def serialize_entries(entries: Column) -> Column:
 def serialize_map(payload_map: Column) -> Column:
     """Serialize a map column to wire text (key-sorted)."""
     return serialize_entries(F.map_entries(payload_map))
+
+
+def frame_map(payload_map: Column, sep: str | None) -> Column:
+    """Serialize a map column for a transport: raw multi-line wire text
+    when ``sep`` is None, else one line with ``sep`` for each ``\\n``.
+
+    A key or value holding ``\\n`` (or ``sep``) would split into bogus
+    entries on the far side, so such a row fails IN-ROW, inside the
+    write's own pass (a filter+count pre-scan would read the input
+    twice), naming the offending keys. ``check_sep`` keeps ``sep``
+    apart from ``=`` and ``\\n``, so a ``sep`` on the line can only come
+    from a key or value, which is what the guard reads."""
+    what = "a raw newline"
+    if sep is not None:
+        what += f" or the separator {check_sep(sep)!r}"
+
+    def holds_break(c: Column) -> Column:
+        hit = F.instr(c, "\n") > 0
+        return hit if sep is None else hit | (F.instr(c, sep) > 0)
+
+    # the test reads the map's own key and value arrays; the filtered
+    # map is built only for the message of a failing row
+    clash = F.exists(F.map_keys(payload_map), holds_break) | F.exists(
+        F.map_values(payload_map), holds_break
+    )
+    bad = F.map_filter(payload_map, lambda k, v: holds_break(k) | holds_break(v))
+    wire = serialize_map(payload_map)
+    text = wire if sep is None else F.replace(wire, F.lit("\n"), F.lit(sep))
+    return F.when(
+        clash,
+        F.raise_error(
+            F.concat(
+                F.lit(
+                    f"{what} occurs inside a packet key or value, where it "
+                    "would split the entry on the wire; offending keys: "
+                ),
+                F.concat_ws(",", F.map_keys(bad)),
+            )
+        ).cast("string"),
+    ).otherwise(text)
 
 
 def bitmask_admit(level: Column, global_mask: int = DEFAULT_GLOBAL_MASK) -> Column:

@@ -32,6 +32,12 @@ def distinct_tokens(text: Column) -> Column:
     return F.array_distinct(tokens(text))
 
 
+def distinct_tokens_sql(text_col: str) -> str:
+    """:func:`distinct_tokens` of the column ``text_col`` as Spark SQL
+    text, for SQL-text templates such as :func:`simhash_expr`."""
+    return f"array_distinct(filter(split({text_col}, ' '), __t -> length(__t) > 0))"
+
+
 def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
@@ -319,58 +325,44 @@ def minhash_bands(sig: Column, n_bands: int = 4, rows_per_band: int = 3) -> Colu
     )
 
 
-def simhash16_expr(tokens_sql: str) -> str:
-    """Spark SQL expression text for the 16-bit SimHash of a
-    distinct-token array expression ``tokens_sql``. (String form because
-    ``shiftleft``'s Python DSL wrapper needs literal shift amounts.)
+def simhash_expr(tokens_sql: str, bits: int) -> str:
+    """Spark SQL expression text for the ``bits``-wide SimHash (a
+    multiple of 4, at most 32) of a distinct-token array expression
+    ``tokens_sql`` (see :func:`distinct_tokens_sql`). (String form
+    because ``shiftleft``'s Python DSL wrapper needs literal shift
+    amounts.)
 
-    The per-token md5 word does not depend on the bit index, so it is
-    hashed ONCE into a bound array (the 1-element-array binding trick —
-    Catalyst does no CSE across lambda bodies; inlining the hash in the
-    per-bit vote re-ran md5 16× per token, measured ~3× the whole
-    query). The 16 bit-votes then fold over plain ints.
+    The per-token md5 word (its first ``bits / 4`` hex chars) does not
+    depend on the bit index, so it is hashed ONCE into a bound array
+    (the 1-element-array binding trick — Catalyst does no CSE across
+    lambda bodies; inlining the hash in the per-bit vote re-ran md5 per
+    bit per token, measured ~3× the whole query). The per-bit majority
+    votes then fold over plain integers: INT up to 16 bits, BIGINT
+    above, because ``shiftleft(1, 31)`` overflows a signed INT.
 
-    DuckDB mirror uses ``list_reduce``/``list_transform`` and
+    Two widths are in use. 16 bits is the exact gate's fingerprint
+    (the batch ``simhash_fingerprints`` and the streaming
+    ``near_dedup_within_watermark(mode="exact")``). 32 bits is the
+    BANDED streaming gate's, split there into two 16-bit bands: banding
+    a 16-bit fingerprint into two 8-bit keys gives each band only 256
+    possible values, so a band's dedup state SATURATES after 256
+    distinct values in the horizon and the gate would reject
+    everything — 16-bit bands (65,536 values each) keep the
+    false-collision rate workable at realistic ingest volumes.
+
+    DuckDB mirror (16 bits) uses ``list_reduce``/``list_transform`` and
     ``CAST('0x'||... AS INT)`` — see queries/text.py.
     """
+    ty = "INT" if bits <= 16 else "BIGINT"
     return f"""
     element_at(transform(
       array(transform({tokens_sql},
-                      t -> CAST(conv(substring(md5(t), 1, 4), 16, 10) AS INT))),
+                      t -> CAST(conv(substring(md5(t), 1, {bits // 4}), 16, 10) AS {ty}))),
       hs -> aggregate(
-        sequence(0, 15), 0,
+        sequence(0, {bits - 1}), CAST(0 AS {ty}),
         (acc, j) -> acc + IF(
           aggregate(hs, 0, (a, h) -> a + IF(((h >> j) & 1) = 1, 1, -1)) > 0,
-          shiftleft(1, j), 0))
-    ), 1)
-    """
-
-
-def simhash32_expr(tokens_sql: str) -> str:
-    """32-bit SimHash of a distinct-token array expression — the
-    BANDED streaming gate's fingerprint (streaming/windows.py
-    ``near_dedup_within_watermark(mode="banded")``), split there into
-    two 16-bit bands. Same construction as :func:`simhash16_expr`
-    (one md5 word per token via the 1-element-array binding trick,
-    then per-bit majority votes) widened to 8 hex chars / 32 bit
-    positions; the word and the fold run in BIGINT because
-    ``shiftleft(1, 31)`` overflows a signed INT.
-
-    Why a wider hash exists at all: banding a 16-bit fingerprint into
-    two 8-bit keys gives each band only 256 possible values, so a
-    band's dedup state SATURATES after 256 distinct values in the
-    horizon and the gate would reject everything — 16-bit bands
-    (65,536 values each) keep the false-collision rate workable at
-    realistic ingest volumes."""
-    return f"""
-    element_at(transform(
-      array(transform({tokens_sql},
-                      t -> CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT))),
-      hs -> aggregate(
-        sequence(0, 31), CAST(0 AS BIGINT),
-        (acc, j) -> acc + IF(
-          aggregate(hs, 0, (a, h) -> a + IF(((h >> j) & 1) = 1, 1, -1)) > 0,
-          shiftleft(CAST(1 AS BIGINT), j), CAST(0 AS BIGINT)))
+          shiftleft(CAST(1 AS {ty}), j), CAST(0 AS {ty})))
     ), 1)
     """
 

@@ -28,20 +28,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_work_flow_for_big_data_spark.catalog import BROADCAST_MAX_BYTES
+from etl_work_flow_for_big_data_spark.catalog import _merge_unless_small
 from etl_work_flow_for_big_data_spark.functions.text import (
+    distinct_tokens_sql,
     fingerprint,
     minhash_bands,
     minhash_signature,
     round4_ratio,
     shingles,
-    simhash16_expr,
+    simhash_expr,
     tokens,
 )
 
 # conservative in-memory price of one broadcast row carrying a shingle
-# set (array of short strings + JVM/hash-relation overhead); see
-# minhash_lsh_pairs join-strategy note
+# set (hundreds of short strings × ~20-30 B each, plus JVM array +
+# hash-relation overhead), so the size gate only clears when the whole
+# corpus is unambiguously dim-sized; see minhash_lsh_pairs
+# join-strategy note
 _SHINGLE_ROW_BYTES = 4096
 
 
@@ -345,17 +348,9 @@ def minhash_lsh_pairs(
             "sub-quadratic candidate bound"
         )
     rows_per_band = n_hashes // n_bands
-    # price one broadcast-side row: a shingle ARRAY of short strings
-    # (hundreds of entries × ~20-30 B each, plus JVM array + hash-map
-    # entry overhead) — deliberately conservative so the gate only
-    # clears when the whole corpus is unambiguously dim-sized
-    small_corpus = (
-        corpus_rows is not None
-        and corpus_rows * _SHINGLE_ROW_BYTES <= BROADCAST_MAX_BYTES
-    )
 
     def _hinted(frame: DataFrame) -> DataFrame:
-        return frame if small_corpus else frame.hint("merge")
+        return _merge_unless_small(frame, corpus_rows, _SHINGLE_ROW_BYTES)
 
     from etl_work_flow_for_big_data_spark.catalog import fan_out
 
@@ -429,12 +424,9 @@ def simhash_fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFrame
     """Per-doc 16-bit SimHash over distinct tokens. Equal values are
     near-dup candidates (constant-size state per doc; the cheapest
     candidate generator at scale). Returns (id, simhash)."""
-    toks_sql = (
-        f"array_distinct(filter(split({text_col}, ' '), __t -> length(__t) > 0))"
-    )
     return df.select(
         F.col(id_col).alias("id"),
-        F.expr(simhash16_expr(toks_sql)).cast("int").alias("simhash"),
+        F.expr(simhash_expr(distinct_tokens_sql(text_col), 16)).cast("int").alias("simhash"),
     )
 
 

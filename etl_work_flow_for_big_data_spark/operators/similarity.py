@@ -373,7 +373,7 @@ def ann_near_dup_pairs(
     P[caught] above to ±0.02, so extrapolate with the formula.
     """
     from etl_work_flow_for_big_data_spark.catalog import (
-        BROADCAST_MAX_BYTES,
+        _merge_unless_small,
         fan_out,
     )
 
@@ -420,10 +420,6 @@ def ann_near_dup_pairs(
     # factors the gate's "never broadcasts unless provably dim-sized"
     # invariant would be off by the fan-out (ADVICE r13)
     fan = n_tables * ((n_planes + 1) if multi_probe else 1)
-    small = (
-        corpus_rows is not None
-        and corpus_rows * (dim * 16) * fan <= BROADCAST_MAX_BYTES
-    )
     left = base
     if multi_probe:
         probes = F.array(
@@ -431,11 +427,8 @@ def ann_near_dup_pairs(
             *[F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(n_planes)],
         )
         left = base.select("id", "v", "nsq", "tbl", F.explode(probes).alias("bucket"))
-    if not small:
-        left = left.hint("merge")
-        base = base.hint("merge")
-    x = left.alias("x")
-    y = base.alias("y")
+    x = _merge_unless_small(left, corpus_rows, dim * 16 * fan).alias("x")
+    y = _merge_unless_small(base, corpus_rows, dim * 16 * fan).alias("y")
     cond = (
         (F.col("x.bucket") == F.col("y.bucket"))
         & (F.col("x.tbl") == F.col("y.tbl"))

@@ -235,7 +235,7 @@ def _scaled_planes(n: int | None) -> int:
     "both engines derive the identical candidate set.",
 )
 def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_work_flow_for_big_data_spark.catalog import table_row_count
+    from etl_work_flow_for_big_data_spark.catalog import _footer_rows
     from etl_work_flow_for_big_data_spark.functions.vectors import is_valid_embedding
     from etl_work_flow_for_big_data_spark.operators.dedup import apply_near_dedup
     from etl_work_flow_for_big_data_spark.operators.similarity import (
@@ -245,10 +245,7 @@ def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").filter(
         is_valid_embedding(F.col("embedding"), dim=64)
     )
-    try:
-        n = table_row_count(sf_dir, "embeddings")
-    except Exception:  # noqa: BLE001 — unstat-able ⇒ scale-safe merge
-        n = None
+    n = _footer_rows(sf_dir, "embeddings")
     pairs = ann_near_dup_pairs(
         e, "vec_id", "embedding", threshold=0.4,
         n_planes=_scaled_planes(n), dim=64, corpus_rows=n,
@@ -294,7 +291,7 @@ def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     "what runs at 100 TB.",
 )
 def dedup_embedding_ann_h1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_work_flow_for_big_data_spark.catalog import table_row_count
+    from etl_work_flow_for_big_data_spark.catalog import _footer_rows
     from etl_work_flow_for_big_data_spark.functions.vectors import is_valid_embedding
     from etl_work_flow_for_big_data_spark.operators.dedup import apply_near_dedup
     from etl_work_flow_for_big_data_spark.operators.similarity import (
@@ -304,10 +301,7 @@ def dedup_embedding_ann_h1(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").filter(
         is_valid_embedding(F.col("embedding"), dim=64)
     )
-    try:
-        n = table_row_count(sf_dir, "embeddings")
-    except Exception:  # noqa: BLE001 — unstat-able ⇒ scale-safe merge
-        n = None
+    n = _footer_rows(sf_dir, "embeddings")
     pairs = ann_near_dup_pairs(
         e, "vec_id", "embedding", threshold=0.4,
         n_planes=_scaled_planes(n), dim=64, corpus_rows=n,

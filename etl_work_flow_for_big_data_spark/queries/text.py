@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_work_flow_for_big_data_spark.catalog import load_table, table_row_count
+from etl_work_flow_for_big_data_spark.catalog import _footer_rows, load_table
 from etl_work_flow_for_big_data_spark.functions.text import (
     EN_STOPWORDS,
     bpe_ish_tokens,
@@ -370,13 +370,9 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # footer row count (metadata read) feeds the r13 size gate: a
     # provably dim-sized corpus keeps the broadcast join plan, a big
     # or unknown one pins sort-merge (see minhash_lsh_pairs)
-    try:
-        n_docs = table_row_count(sf_dir, "documents")
-    except Exception:  # noqa: BLE001 — unstat-able ⇒ scale-safe merge
-        n_docs = None
     return minhash_lsh_pairs(
         d, "text", "doc_id", k=5, n_hashes=12, n_bands=4, threshold=0.5,
-        corpus_rows=n_docs,
+        corpus_rows=_footer_rows(sf_dir, "documents"),
     )
 
 

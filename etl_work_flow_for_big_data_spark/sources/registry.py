@@ -25,9 +25,11 @@ import shutil
 from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from etl_work_flow_for_big_data_spark.functions.packets import frame_map, unframe_line
 
 
 def _lookup(table: dict[str, Any], what: str, name: str) -> Any:
@@ -143,25 +145,10 @@ def _read_kv_text(reader, path: str, sep: str = "|", **opts: Any) -> DataFrame:
     """Wire-packet files: one packet per line (entries separated by the
     substitute char ``sep`` since raw packets are multi-line), parsed
     to attrs + promoted keys via the parse_packets operator."""
-    sep = _check_sep(sep)
     from etl_work_flow_for_big_data_spark.operators.transforms import parse_packets
 
-    raw = reader.options(**opts).text(path)
-    return parse_packets(raw.select(_line_payload(sep)))
-
-
-def _check_sep(sep: str) -> str:
-    if len(sep) != 1:  # the wire swaps sep and "\n" one for one
-        raise ValueError(f"sep must be exactly one character, got {sep!r}")
-    return sep
-
-
-def _line_payload(sep: str, text="value"):
-    """One packet per file line: the line terminator the text reader
-    stripped WAS the final entry's terminator, so restore it — the
-    parser (packet_entries) consumes only terminated entries, exactly
-    like the reference's find-loop (MFramework.cpp:1234-1243)."""
-    return F.concat(F.replace(text, F.lit(sep), F.lit("\n")), F.lit("\n")).alias("payload")
+    payload = unframe_line(F.col("value"), sep).alias("payload")
+    return parse_packets(reader.options(**opts).text(path).select(payload))
 
 
 DEFAULT.register("kv_text", _read_kv_text)
@@ -180,47 +167,14 @@ def _read_jdbc(reader, path: str, **opts: Any) -> DataFrame:
 DEFAULT.register("jdbc", _read_jdbc)
 
 
-def _has_raw_newline(attrs: Column) -> Column:
-    """True when a raw newline occurs in any key or value of the
-    ``attrs`` map: on the wire it is indistinguishable from the entry
-    terminator. The check runs on the map, not on the serialized wire,
-    which legitimately ends every entry with a newline."""
-    return F.exists(F.map_values(attrs), lambda v: F.instr(v, "\n") > 0) | F.exists(
-        F.map_keys(attrs), lambda k: F.instr(k, "\n") > 0
-    )
-
-
 def write_kv_text(df: DataFrame, path: str, attrs_col: str = "attrs", sep: str = "|") -> None:
     """A2 queue-sink analog: serialize packet maps back to the wire
     format (key-sorted ``k=v`` entries, LoggerWriter/AMQPProducer shape,
     MFramework.cpp:1552-1560) and write one packet per line, entry
-    separator substituted with ``sep``."""
-    from etl_work_flow_for_big_data_spark.functions.packets import serialize_map
-
-    _check_sep(sep)
-    wire = serialize_map(F.col(attrs_col))
-    # neither the separator NOR a raw newline may occur inside any key
-    # or value — after the swap both are indistinguishable from entry
-    # boundaries and the round-trip would silently split the value
-    # into bogus entries. Fail loudly, IN-ROW, inside the same write
-    # pass (a filter+count pre-scan would double the full scan at
-    # 100 TB just for a sanity check).
-    guarded = F.when(
-        (F.instr(wire, sep) > 0) | _has_raw_newline(F.col(attrs_col)),
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    f"separator {sep!r} or a raw newline occurs inside "
-                    "a packet value; newlines cannot ride the wire, and "
-                    "the sep must be absent from the data "
-                    "(write_kv_text(..., sep=...)); offending packet: "
-                ),
-                wire,
-            )
-        ).cast("string"),
-    ).otherwise(F.replace(wire, F.lit("\n"), F.lit(sep)))
-    out = df.select(guarded.alias("value"))
-    out.write.mode("overwrite").text(path)
+    separator substituted with ``sep``. A key or value holding ``sep``
+    or a raw newline fails the write in-row (``frame_map``)."""
+    line = frame_map(F.col(attrs_col), sep)
+    df.select(line.alias("value")).write.mode("overwrite").text(path)
 
 
 # -- kafka (A1/A2: the message-queue spine) ------------------------------
@@ -275,9 +229,9 @@ def kafka_packets(df: DataFrame, sep: str | None = None) -> DataFrame:
     from etl_work_flow_for_big_data_spark.operators.transforms import parse_packets
 
     text = F.col("value").cast("string")
-    payload = text.alias("payload") if sep is None else _line_payload(_check_sep(sep), text)
+    payload = text if sep is None else unframe_line(text, sep)
     keep = [c for c in ("topic", "partition", "offset", "timestamp") if c in df.columns]
-    return parse_packets(df.select(payload, *keep))
+    return parse_packets(df.select(payload.alias("payload"), *keep))
 
 
 def kafka_wire_frame(
@@ -287,27 +241,9 @@ def kafka_wire_frame(
     the reference's ``k=v\\n`` wire text as ``value`` (bytes), with an
     optional partition ``key``. The producer is then just
     ``kafka_wire_frame(df).write.format('kafka')...`` — this function
-    is the broker-independent (and unit-tested) half of A2."""
-    from etl_work_flow_for_big_data_spark.functions.packets import serialize_map
-
-    # same wire integrity rule as write_kv_text: fail in-row rather
-    # than corrupt the consumer's framing silently
-    value = (
-        F.when(
-            _has_raw_newline(F.col(attrs_col)),
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        "a raw newline occurs inside a packet value; "
-                        "newlines cannot ride the k=v wire; offending keys: "
-                    ),
-                    F.concat_ws(",", F.map_keys(F.col(attrs_col))),
-                )
-            ).cast("binary"),
-        )
-        .otherwise(F.encode(serialize_map(F.col(attrs_col)), "UTF-8"))
-        .alias("value")
-    )
+    is the broker-independent (and unit-tested) half of A2. A key or
+    value holding a raw newline fails in-row, like ``write_kv_text``."""
+    value = F.encode(frame_map(F.col(attrs_col), None), "UTF-8").alias("value")
     if key_col is None:
         return df.select(value)
     # key from a top-level column if present, else from the attrs map

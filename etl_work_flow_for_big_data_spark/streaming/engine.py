@@ -26,6 +26,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from etl_work_flow_for_big_data_spark.functions.packets import wire_entries
+
 QueryBuilder = Callable[[SparkSession], StreamingQuery]
 
 ACTION_START = "startsession"
@@ -128,37 +130,30 @@ class PipelineManager:
         self, payload: str, id_to_name: dict[int, str]
     ) -> str:
         """Consume one raw control wire packet exactly like the
-        reference's control thread (MFramework.cpp:1660-1756): parse
-        separator-TERMINATED ``s=<session id>`` / ``a=<action>``
-        entries with a find-loop, then dispatch. Reference quirks kept
-        faithfully:
+        reference's control thread (MFramework.cpp:1660-1756): read
+        the ``s=<session id>`` / ``a=<action>`` entries with the data
+        path's parser (``wire_entries``: terminated entries only, the
+        last of a repeated key wins), then dispatch. Reference quirks
+        kept faithfully:
 
         - ``startsession`` does NOT honor the id-0 broadcast (only
           stop/restart do; start with an unknown/0 id is logged and
           ignored — :1685-1689 vs :1693-1722);
         - an unknown session id is logged and ignored, never an error
           (:1739-1742);
-        - a trailing non-terminated segment is dropped by the
-          find-loop.
+        - a trailing non-terminated segment is dropped, and an ``s``
+          that is not an integer makes the packet invalid.
 
         Returns a short status string ('dispatched', 'invalid-id',
         'invalid-packet') for observability; the reference only logs.
         """
-        sid: int | None = None
-        action = ""
-        start = 0
-        while (end := payload.find("\n", start)) != -1:
-            entry = payload[start:end]
-            if len(entry) >= 2 and entry[1] == "=":
-                if entry[0] == "s":
-                    try:
-                        sid = int(entry[2:])
-                    except ValueError:
-                        sid = None
-                elif entry[0] == "a":
-                    action = entry[2:]
-            start = end + 1
-        if sid is None or action not in (ACTION_START, ACTION_STOP, ACTION_RESTART):
+        entries = dict(wire_entries(payload))
+        action = entries.get("a")
+        try:
+            sid = int(entries["s"])
+        except (KeyError, ValueError):
+            return "invalid-packet"
+        if action not in (ACTION_START, ACTION_STOP, ACTION_RESTART):
             return "invalid-packet"
         if sid == 0 and action != ACTION_START:
             self.control(action, None)

@@ -73,13 +73,13 @@ def near_dedup_within_watermark(
 
     ``mode="exact"`` (default): one 16-bit fingerprint key, matching
     is exact-bucket (Hamming-0) — the same expression as the batch
-    operator (``functions.text.simhash16_expr`` via
+    operator (``functions.text.simhash_expr(..., 16)`` via
     ``operators.dedup.simhash_fingerprints``), so a document dropped
     here is exactly one the batch path would have paired.
 
     ``mode="banded"`` (r12, VERDICT r11 #5): Hamming-1 tolerance at
     state ×2 instead of the ×17 multi-probe price. A 32-bit SimHash
-    (``simhash32_expr``) is split into two 16-bit bands and the gate
+    (``simhash_expr(..., 32)``) is split into two 16-bit bands and the gate
     chains TWO ``dropDuplicatesWithinWatermark`` stages — high band,
     then low band. A single flipped fingerprint bit lives in exactly
     one band, so the other band still matches: every document within
@@ -116,29 +116,23 @@ def near_dedup_within_watermark(
             raise ValueError(
                 f"input already has a {col} column; rename it first"
             )
-    toks_sql = (
-        f"array_distinct(filter(split({text_col}, ' '), "
-        f"__t -> length(__t) > 0))"
+    from etl_work_flow_for_big_data_spark.functions.text import (
+        distinct_tokens_sql,
+        simhash_expr,
     )
-    if mode == "exact":
-        from etl_work_flow_for_big_data_spark.functions.text import (
-            simhash16_expr,
-        )
 
+    toks_sql = distinct_tokens_sql(text_col)
+    if mode == "exact":
         return (
             df.withColumn(
-                "__simhash", F.expr(simhash16_expr(toks_sql)).cast("int")
+                "__simhash", F.expr(simhash_expr(toks_sql, 16)).cast("int")
             )
             .withWatermark(ts_col, watermark)
             .dropDuplicatesWithinWatermark(["__simhash"])
             .drop("__simhash")
         )
     if mode == "banded":
-        from etl_work_flow_for_big_data_spark.functions.text import (
-            simhash32_expr,
-        )
-
-        fp = F.expr(simhash32_expr(toks_sql))
+        fp = F.expr(simhash_expr(toks_sql, 32))
         return (
             df.withColumn("__band_hi", F.shiftright(fp, 16).cast("int"))
             .withColumn(

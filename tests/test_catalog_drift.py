@@ -20,7 +20,11 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from etl_work_flow_for_big_data_spark.catalog import _drifted_schema, load_table
+from etl_work_flow_for_big_data_spark.catalog import (
+    _drifted_schema,
+    load_table,
+    table_row_count,
+)
 
 
 @pytest.fixture()
@@ -226,3 +230,17 @@ def test_hive_layout_inside_metadata_dir_is_ignored(tmp_path):
         "id": "bigint",
         "x": "string",
     }
+
+
+def test_row_count_skips_files_the_scan_skips(spark, tmp_path):
+    """``table_row_count`` counts what ``load_table`` reads: a leftover
+    ``_temporary/`` attempt file (an aborted write) or a hidden file is
+    not part of the table, so its rows are not counted."""
+    d = tmp_path / "t.parquet"
+    (d / "_temporary" / "0").mkdir(parents=True)
+    ten = pa.table({"id": pa.array(range(10), pa.int64())})
+    pq.write_table(ten, str(d / "part-0.parquet"))
+    pq.write_table(ten, str(d / "_temporary" / "0" / "part-9.parquet"))
+    pq.write_table(ten, str(d / ".part-8.parquet"))
+    assert load_table(spark, str(tmp_path), "t").count() == 10
+    assert table_row_count(str(tmp_path), "t") == 10

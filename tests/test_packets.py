@@ -24,6 +24,7 @@ from etl_work_flow_for_big_data_spark.functions.packets import (
     packet_map,
     serialize_entries,
     serialize_map,
+    wire_entries,
 )
 
 
@@ -203,9 +204,11 @@ def test_parser_matches_reference_find_loop(payload):
     """For ARBITRARY payloads (valid entries, junk, embedded '=',
     empty segments, missing terminators), the Catalyst parser produces
     exactly what the reference's find-loop would — byte-for-byte wire
-    fidelity as a property, not just on curated cases."""
+    fidelity as a property, not just on curated cases. The driver-side
+    parse (``wire_entries``, the control plane's) agrees too."""
     spark = _SPARK[0]
     assert _parse_one(spark, payload) == _reference_find_loop(payload)
+    assert wire_entries(payload) == _reference_find_loop(payload)
 
 
 _WIDE_ALPHABET = string.ascii_lowercase + string.digits + "=|.\n \r\u0085\u2028\u00e9\U0001F600"
@@ -229,6 +232,6 @@ def test_packet_map_matches_reference_find_loop_last_wins(payloads):
     df = _SPARK[0].createDataFrame([(i, p) for i, p in enumerate(payloads)], "i int, payload string")
     rows = df.select("i", packet_map(F.col("payload")).alias("m")).collect()
     got = {r["i"]: r["m"] for r in rows}
-    assert [got[i] for i in range(len(payloads))] == [
-        dict(_reference_find_loop(p)) for p in payloads
-    ]
+    want = [dict(_reference_find_loop(p)) for p in payloads]
+    assert [got[i] for i in range(len(payloads))] == want
+    assert [dict(wire_entries(p)) for p in payloads] == want

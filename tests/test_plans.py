@@ -250,7 +250,16 @@ _FAULTY_KV = (
     "s=2|t=billing|v=50\n"
     "s=3|v=7\n"
 )
-_FAULTY_WANT = {"rating": [1], "billing": [2], "dead-letter": [3]}
+#: a corrupt landing file: invalid UTF-8 and NUL bytes in values, in a
+#: key, in ``s`` and as a whole line (the text reader decodes an invalid
+#: byte to U+FFFD)
+_CORRUPT_KV = (
+    b"s=4|t=rating|v=\xff\xfe\x00\n"
+    b"s=\xff|t=rating\n"
+    b"\x00\x00\xc3(\n"
+    b"s=6|\xff=x|t=billing\n"
+)
+_FAULTY_WANT = {"rating": [1, 4], "billing": [2, 6], "dead-letter": [3]}
 
 
 def _by_route(rows) -> dict:
@@ -264,7 +273,9 @@ def test_malformed_s_is_dropped_not_fatal(spark, tmp_path):
     """Under ANSI casts a malformed ``s`` (non-numeric, empty, numeric
     prefix) must not abort the pipeline: it promotes to NULL and
     ``filter_valid`` drops it like a missing ``s``, in the batch
-    pipeline and in the routed stream alike."""
+    pipeline and in the routed stream alike. A second landing file of
+    invalid UTF-8 and NUL bytes does not abort either: its valid
+    records are committed to their routes and the rest dropped."""
     from etl_work_flow_for_big_data_spark.plans.runner import (
         IOBinding,
         run_batch_pipeline,
@@ -275,6 +286,7 @@ def test_malformed_s_is_dropped_not_fatal(spark, tmp_path):
     landing = tmp_path / "landing"
     landing.mkdir()
     (landing / "in.cdr").write_text(_FAULTY_KV)
+    (landing / "corrupt.cdr").write_bytes(_CORRUPT_KV)
     spec = PipelineSpec.from_rows(
         "mediation",
         [

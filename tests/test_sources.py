@@ -78,13 +78,15 @@ def test_kv_text_readers_match_reference_split(spark, tmp_path_factory, sep, lin
 def test_multichar_sep_is_rejected_at_every_entry_point(spark, tmp_path):
     """A separator longer than one character used to corrupt data
     silently (``translate`` mapped only its first character and deleted
-    the rest from every value); now each entry point refuses it."""
+    the rest from every value); so did ``=`` and a newline, which fuse
+    with the entry syntax (``sep="="`` read ``s=1=t=a=`` as no entries
+    at all). Each entry point refuses all of them."""
     landing = tmp_path / "in"
     landing.mkdir()
     (landing / "p.txt").write_text("s=1abt=rating\n")
     attrs = spark.createDataFrame([({"s": "1"},)], "attrs map<string,string>")
     records = spark.createDataFrame([(b"s=1abt=rating",)], "value binary")
-    for sep in ("ab", ""):
+    for sep in ("ab", "", "=", "\n"):
         entry_points = [
             lambda: DEFAULT.read(spark, "kv_text", str(landing), sep=sep),
             lambda: DEFAULT.read_stream(spark, "kv_text", str(landing), None, sep=sep),

@@ -206,11 +206,12 @@ def test_kv_text_write_read_roundtrip(spark, tmp_path):
 def test_kv_text_write_separator_clash_fails_in_pass(spark, tmp_path):
     """The separator guard runs IN-ROW inside the write pass (no extra
     filter+count scan of the output); a value containing the separator
-    aborts the write with a clear message."""
+    aborts the write with a clear message naming only the offending
+    keys."""
     bad = spark.createDataFrame(
-        [({"s": "has|pipe"},)], "attrs map<string,string>"
+        [({"s": "has|pipe", "t": "fine"},)], "attrs map<string,string>"
     )
-    with pytest.raises(Exception, match="separator .* occurs inside"):
+    with pytest.raises(Exception, match="separator .* occurs inside .*offending keys: s[^,]"):
         write_kv_text(bad, str(tmp_path / "bad"))
 
 

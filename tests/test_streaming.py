@@ -570,7 +570,7 @@ def test_near_dedup_rejects_simhash_column_collision(spark):
 
 
 def _fp32_py(text: str) -> int:
-    """Python reference of functions.text.simhash32_expr (per-token
+    """Python reference of functions.text.simhash_expr(..., 32) (per-token
     32-bit md5 word, per-bit majority vote over distinct tokens)."""
     import hashlib
 
