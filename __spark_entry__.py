@@ -21,14 +21,12 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from etl_work_flow_for_big_data_spark.queries import load_all  # noqa: E402
-from etl_work_flow_for_big_data_spark.session import tune_session  # noqa: E402
 
 SF0001 = "/root/testdata/sf0.001"
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship rating query (SURVEY.md §7.1 step 1) on sf0.001."""
-    tune_session(spark)
     registry = load_all()
     return registry["rate_charge"].fn(spark, SF0001)
 

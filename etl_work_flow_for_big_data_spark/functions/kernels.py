@@ -248,19 +248,6 @@ def pairwise_cosine(
     corpus_mat = np.array([c[1] for c in corpus], dtype=np.float64)
     corpus_norms = _fold_norm_sq(corpus_mat)
     src = df.select(F.col(id_col).alias("d1"), F.col(vec_col).alias("v"))
-    # fan out the kernel input (r15): a single-file corpus scans as ONE
-    # task, so the whole n×m score grid ran in one Python worker
-    # (measured at sf0.1: 2000×2000 pairs 8-16 s → 2.5-4 s fanned out).
-    # Gated on the per-row kernel work (|corpus| × dim multiplies): a
-    # small broadcast side (top-k's 5 query vectors, IVF's centroid
-    # table) makes the exchange pure overhead — measured sim_topk
-    # 0.77 → 0.90 s ungated vs a 3-4× win on the pair grid. Projected
-    # to (id, vector) above so the exchange moves only the kernel's
-    # columns; no-op when the input already has >= cores splits.
-    if len(corpus) * len(corpus[0][1]) >= 16384:
-        from etl_work_flow_for_big_data_spark.catalog import fan_out
-
-        src = fan_out(src)
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

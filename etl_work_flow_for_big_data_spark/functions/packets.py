@@ -143,8 +143,9 @@ def frame_map(payload_map: Column, sep: str | None) -> Column:
     when ``sep`` is None, else one line with ``sep`` for each ``\\n``.
 
     A key or value holding ``\\n`` (or ``sep``) would split into bogus
-    entries on the far side, so such a row fails IN-ROW, inside the
-    write's own pass (a filter+count pre-scan would read the input
+    entries on the far side, and a NULL value has no spelling on the
+    wire (its entry would vanish), so such a row fails IN-ROW, inside
+    the write's own pass (a filter+count pre-scan would read the input
     twice), naming the offending keys. ``check_sep`` keeps ``sep``
     apart from ``=`` and ``\\n``, so a ``sep`` on the line can only come
     from a key or value, which is what the guard reads."""
@@ -156,12 +157,15 @@ def frame_map(payload_map: Column, sep: str | None) -> Column:
         hit = F.instr(c, "\n") > 0
         return hit if sep is None else hit | (F.instr(c, sep) > 0)
 
+    def bad_value(v: Column) -> Column:
+        return v.isNull() | holds_break(v)
+
     # the test reads the map's own key and value arrays; the filtered
     # map is built only for the message of a failing row
     clash = F.exists(F.map_keys(payload_map), holds_break) | F.exists(
-        F.map_values(payload_map), holds_break
+        F.map_values(payload_map), bad_value
     )
-    bad = F.map_filter(payload_map, lambda k, v: holds_break(k) | holds_break(v))
+    bad = F.map_filter(payload_map, lambda k, v: holds_break(k) | bad_value(v))
     wire = serialize_map(payload_map)
     text = wire if sep is None else F.replace(wire, F.lit("\n"), F.lit(sep))
     return F.when(
@@ -170,7 +174,8 @@ def frame_map(payload_map: Column, sep: str | None) -> Column:
             F.concat(
                 F.lit(
                     f"{what} occurs inside a packet key or value, where it "
-                    "would split the entry on the wire; offending keys: "
+                    "would split the entry on the wire, or a value is NULL, "
+                    "which the wire cannot spell; offending keys: "
                 ),
                 F.concat_ws(",", F.map_keys(bad)),
             )

@@ -57,14 +57,9 @@ def write_bucketed(
     table: str,
     bucket_key: str,
     n_buckets: int = 16,
-    sort_key: str | None = None,
 ) -> None:
-    """Persist a table bucketed (and optionally sorted) by the join
-    key. Two tables bucketed the same way join WITHOUT a shuffle —
-    the shuffle is pre-paid once at write time, amortized over every
-    subsequent join (the right layout for fact tables joined on the
-    same key daily)."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_key)
-    if sort_key:
-        writer = writer.sortBy(sort_key)
-    writer.saveAsTable(table)
+    """Persist a table bucketed by the join key. Two tables bucketed
+    the same way join WITHOUT a shuffle — the shuffle is pre-paid once
+    at write time, amortized over every subsequent join (the right
+    layout for fact tables joined on the same key daily)."""
+    df.write.mode("overwrite").bucketBy(n_buckets, bucket_key).saveAsTable(table)

@@ -60,20 +60,13 @@ def asof_join(
     ]
     unioned = l_tagged.select(*cols).unionByName(r_tagged.select(*cols))
 
-    if direction == "backward":
-        w = (
-            Window.partitionBy(*keys)
-            .orderBy(F.col("__t").asc(), F.col("__is_right").desc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        carried = [F.last(c, ignorenulls=True).over(w).alias(c) for c in payload]
-    else:
-        w = (
-            Window.partitionBy(*keys)
-            .orderBy(F.col("__t").desc(), F.col("__is_right").desc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        carried = [F.last(c, ignorenulls=True).over(w).alias(c) for c in payload]
+    t_order = F.col("__t").asc() if direction == "backward" else F.col("__t").desc()
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy(t_order, F.col("__is_right").desc())
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    carried = [F.last(c, ignorenulls=True).over(w).alias(c) for c in payload]
 
     # select the carried payload BY NAME after the window pass —
     # re-selecting the window Column objects would plan a second

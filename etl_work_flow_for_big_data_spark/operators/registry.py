@@ -40,9 +40,6 @@ class OperatorRegistry:
                 f"unknown operator {name!r}; registered: {sorted(self._ops)}"
             ) from None
 
-    def names(self) -> list[str]:
-        return sorted(self._ops)
-
     def apply(self, name: str, df: DataFrame, params: dict[str, Any] | None = None) -> DataFrame:
         return self.get(name)(df, **(params or {}))
 

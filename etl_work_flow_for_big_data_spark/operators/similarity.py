@@ -155,10 +155,7 @@ def cosine_pairs(
         )
     n = n_hint if n_hint is not None else df.count()
     n_blocks = max(1, -(-n // block_size))
-    try:
-        shuffle_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):  # "auto" under AQE-advisory setups
-        shuffle_parts = 200
+    shuffle_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     n_splits = max(n_blocks, -(-shuffle_parts // n_blocks))
 
     src = df.select(

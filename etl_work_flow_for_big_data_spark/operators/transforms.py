@@ -172,7 +172,8 @@ def merge_upsert(
 def hash_bucket(col: Column, n: int) -> Column:
     """Deterministic hash bucket of a key column: first 16 bits of
     md5, mod ``n``. Reproducible across engines, runs, and cluster
-    sizes (same family split_assign/mix_weighted use); DuckDB mirror:
+    sizes (split_assign, mix_weighted and route_assign bucket with
+    it); DuckDB mirror:
     ``CAST('0x' || substring(md5(CAST(k AS VARCHAR)), 1, 4) AS INT) % n``.
     """
     return (

@@ -44,25 +44,10 @@ def query(name: str, oracle: str, doc: str = ""):
     """Decorator registering a (spark_fn, oracle_sql) query pair."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        REGISTRY[name] = QuerySpec(name=name, fn=_tuned(fn), oracle=oracle, doc=doc)
+        REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, doc=doc)
         return fn
 
     return deco
-
-
-def _tuned(fn):
-    """Wrap a query fn so runtime confs (UTC tz, AQE) apply even on a
-    driver-owned SparkSession."""
-
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from etl_work_flow_for_big_data_spark.session import tune_session
-
-        tune_session(spark)
-        return fn(spark, sf_dir)
-
-    wrapped.__name__ = getattr(fn, "__name__", "query")
-    wrapped.__doc__ = fn.__doc__
-    return wrapped
 
 
 def load_all() -> dict[str, QuerySpec]:

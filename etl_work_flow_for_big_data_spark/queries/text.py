@@ -32,6 +32,7 @@ from etl_work_flow_for_big_data_spark.operators.dedup import (
     simhash_fingerprints,
 )
 from etl_work_flow_for_big_data_spark.operators.transforms import (
+    hash_bucket,
     pack_sequences as pack_window,
 )
 from etl_work_flow_for_big_data_spark.queries import query
@@ -650,14 +651,10 @@ def text_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("int")
-        % 100
-    )
+    bucket = hash_bucket(F.col("doc_id"), 100)
     return d.select(
         "doc_id",
-        bucket.cast("int").alias("bucket"),
+        bucket.alias("bucket"),
         F.when(bucket < 90, "train")
         .when(bucket < 95, "val")
         .otherwise("test")
@@ -834,14 +831,10 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mix_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("int")
-        % 100
-    )
+    bucket = hash_bucket(F.col("doc_id"), 100)
     rate = F.when(F.col("lang") == "en", 80).otherwise(50)
     return d.filter(bucket < rate).select(
-        "doc_id", "lang", bucket.cast("int").alias("bucket")
+        "doc_id", "lang", bucket.alias("bucket")
     )
 
 

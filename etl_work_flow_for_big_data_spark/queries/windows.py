@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_work_flow_for_big_data_spark.catalog import load_table
+from etl_work_flow_for_big_data_spark.operators.transforms import hash_bucket
 from etl_work_flow_for_big_data_spark.queries import query
 from etl_work_flow_for_big_data_spark.streaming.windows import tumbling_agg
 
@@ -170,19 +171,10 @@ def window_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def route_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    # 16-bit md5 prefix → 0..65535, non-negative on both engines, % 3
-    slot = (
-        F.conv(
-            F.substring(F.md5(F.col("event_id").cast("string")), 1, 4),
-            16,
-            10,
-        ).cast("long")
-        % 3
-    )
     return ev.select(
         "event_id",
         F.col("event_type").alias("route"),
-        slot.alias("rr_slot"),
+        hash_bucket(F.col("event_id"), 3).cast("long").alias("rr_slot"),
     )
 
 

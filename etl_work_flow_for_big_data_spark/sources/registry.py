@@ -172,7 +172,8 @@ def write_kv_text(df: DataFrame, path: str, attrs_col: str = "attrs", sep: str =
     format (key-sorted ``k=v`` entries, LoggerWriter/AMQPProducer shape,
     MFramework.cpp:1552-1560) and write one packet per line, entry
     separator substituted with ``sep``. A key or value holding ``sep``
-    or a raw newline fails the write in-row (``frame_map``)."""
+    or a raw newline, or a NULL value, fails the write in-row
+    (``frame_map``)."""
     line = frame_map(F.col(attrs_col), sep)
     df.select(line.alias("value")).write.mode("overwrite").text(path)
 
@@ -242,7 +243,8 @@ def kafka_wire_frame(
     optional partition ``key``. The producer is then just
     ``kafka_wire_frame(df).write.format('kafka')...`` — this function
     is the broker-independent (and unit-tested) half of A2. A key or
-    value holding a raw newline fails in-row, like ``write_kv_text``."""
+    value holding a raw newline, or a NULL value, fails in-row, like
+    ``write_kv_text``."""
     value = F.encode(frame_map(F.col(attrs_col), None), "UTF-8").alias("value")
     if key_col is None:
         return df.select(value)

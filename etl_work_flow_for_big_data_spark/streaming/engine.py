@@ -11,15 +11,14 @@ manager provides the same control verbs with the same semantics:
 - idempotent start (already-running start is a no-op, mirroring
   ``m_HandleControlStart``'s existing-session check, :1782-1787);
 - name=None (the id-0 analog) broadcasts stop/restart to all;
-- a supervisor pass restarts any registered-but-dead pipeline
-  (``check_once`` for deterministic tests; ``run_supervisor`` loops
-  with the reference's 1 s cadence).
+- a supervisor pass (``check_once``) restarts any
+  registered-but-dead pipeline; callers run it on their own cadence
+  (the reference's monitor loop ticks every second).
 """
 
 from __future__ import annotations
 
 import threading
-import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -186,27 +185,6 @@ class PipelineManager:
                     reg.restarts += 1
                 restarted.append(name)
         return restarted
-
-    def run_supervisor(
-        self, stop_event: threading.Event, cadence_sec: float = 1.0
-    ) -> threading.Thread:
-        """Background monitor loop with the reference's 1 s cadence
-        (MFramework.cpp:1968). Call stop_event.set() to end (the
-        reference's stop-flag, :1211).
-
-        Use only with continuous triggers: an availableNow query that
-        *finishes* its batch is indistinguishable from a dead one and
-        would be restarted every pass — stop() such pipelines (or skip
-        the supervisor) instead."""
-
-        def loop() -> None:
-            while not stop_event.is_set():
-                self.check_once()
-                time.sleep(cadence_sec)
-
-        t = threading.Thread(target=loop, name="pipeline-supervisor", daemon=True)
-        t.start()
-        return t
 
     # -- introspection ---------------------------------------------------
     def status(self) -> dict[str, dict]:

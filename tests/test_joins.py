@@ -53,6 +53,10 @@ def test_overlapping_tiers_full_semantics_on_bnlj_path(spark, fact):
         for r in range_join(fact2, tiers, "v").collect()
     )
     assert both == ["a", "b"]
+    # an empty tariff matches nothing, like the inner join it stands for
+    empty = range_join(fact, tiers.limit(0), "v")
+    assert empty.columns == ["id", "v", "lo", "hi", "tier"]
+    assert empty.count() == 0
 
 
 def test_disjoint_tiers_fast_path_ok(spark, fact):

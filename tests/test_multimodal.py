@@ -29,6 +29,10 @@ def test_metadata_struct(media):
     assert rows[1]["media_meta"]["mime"] == "application/octet-stream"
     assert rows[1]["media_meta"]["source"] == "s1"
     assert bytes(rows[1]["content"]) == b"hello world"
+    # a frame without a source column gets a NULL source, same struct
+    bare = attach_binary(media.select("doc_id", "text"), "text")
+    assert bare.schema["media_meta"] == media.schema["media_meta"]
+    assert bare.filter("doc_id = 1").first()["media_meta"]["source"] is None
 
 
 def test_extract_features_deterministic(media):

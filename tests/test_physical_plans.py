@@ -677,10 +677,11 @@ def test_distributed_ntile_string_key_matches_global_ntile(spark):
 # catalog.fan_out (input-layout-adaptive repartition before the
 # tokenize/shingle/md5/kernel compute) gain exactly ONE round-robin
 # exchange at fixture scale, where every table is a single-split file.
-# The sim_ivf_* kernel fan-out is gated on |corpus| x dim >= 16384 and
-# no-ops at this fixture, so their ceilings gain nothing; the sf0.1
-# plan shape where that gate fires is not pinned here. At >= cores
-# input splits fan_out is a no-op and these ceilings are loose by one.
+# The query-vs-corpus kernel (pairwise_cosine, behind sim_topk and
+# sim_ivf_*) never fans out: its broadcast side is at most 16 centroids
+# or 8 query vectors, so those ceilings gain nothing at any scale. At
+# >= cores input splits fan_out is a no-op and these ceilings are loose
+# by one.
 EXCHANGE_BUDGET = {
     "window_rank": 1,
     "agg_rollup": 1,

@@ -4,6 +4,8 @@ chained DataFrame plan; mirrors session + M_LINKED_SESSIONS tables,
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -57,6 +59,33 @@ def test_order_follows_links_not_row_order(spark):
     assert sorted(r["v"] for r in out) == [2, 3]
 
 
+def test_distribution_operators_compile(spark):
+    """F2/F3 as spec stages: hash distribution by session key and
+    round-robin redistribution show up as their exchanges, and the
+    serializer stage writes the key-sorted wire text back out."""
+    spec = PipelineSpec.from_rows(
+        "fanout",
+        _rows(
+            (1, "identity", {}, 2),
+            (2, "parse_packets", {}, 3),
+            (3, "repartition_by_key", {"key": "s", "n": 3}, 4),
+            (4, "serialize_packets", {}, 5),
+            (5, "round_robin", {"n": 2}, None),
+        ),
+    )
+    df = spark.createDataFrame(
+        [("t=rating\ns=7\n",), ("s=9\nt=billing\nx=a=b\n",)], "payload string"
+    )
+    out = spec.compile(df)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"hashpartitioning\(s#\d+L?, 3\)", plan)
+    assert "RoundRobinPartitioning(2)" in plan
+    assert out.rdd.getNumPartitions() == 2
+    got = sorted(r["payload"] for r in out.select("payload").collect())
+    assert got == ["s=7\nt=rating\n", "s=9\nt=billing\nx=a=b\n"]
+
+
 def test_rejects_cycle():
     spec = PipelineSpec(
         "bad",
@@ -66,6 +95,29 @@ def test_rejects_cycle():
         ],
     )
     with pytest.raises(ValueError, match="root"):
+        spec.ordered()
+    # a root exists, but the chain loops back after it: 1→2→3→2
+    spec = PipelineSpec(
+        "bad",
+        [
+            Stage(1, "identity", next_session_id=2),
+            Stage(2, "identity", next_session_id=3),
+            Stage(3, "identity", next_session_id=2),
+        ],
+    )
+    with pytest.raises(ValueError, match="cycle at 2"):
+        spec.ordered()
+    # a chain 1→2 plus a detached loop 3↔4 the chain never reaches
+    spec = PipelineSpec(
+        "bad",
+        [
+            Stage(1, "identity", next_session_id=2),
+            Stage(2, "identity"),
+            Stage(3, "identity", next_session_id=4),
+            Stage(4, "identity", next_session_id=3),
+        ],
+    )
+    with pytest.raises(ValueError, match="2 orphan stage"):
         spec.ordered()
 
 
@@ -79,6 +131,10 @@ def test_rejects_fork():
         ],
     )
     with pytest.raises(ValueError, match="root"):
+        spec.ordered()
+    # two rows for one session id: which one's edge holds is undefined
+    spec = PipelineSpec("bad", [Stage(1, "identity"), Stage(1, "project")])
+    with pytest.raises(ValueError, match="duplicate session_id"):
         spec.ordered()
 
 
@@ -137,6 +193,12 @@ def test_spec_from_dataframe(spark):
     df = spark.createDataFrame([("s=5\nt=x\n",), ("junk",)], "payload string")
     out = spec.compile(df).select("s", "route").collect()
     assert [(r["s"], r["route"]) for r in out] == [(5, "x")]
+    bad = spark.createDataFrame(
+        [(1, "filter_valid", "validator", '{"required": ', None, None)],
+        topo.schema,
+    )
+    with pytest.raises(ValueError, match="session_id 1 has invalid params JSON"):
+        PipelineSpec.from_dataframe("mediation", bad)
 
 
 def test_route_by_invalid_modes(spark):
@@ -345,15 +407,19 @@ def test_system_settings_loader(spark):
     )
 
     df = spark.createDataFrame(
-        [("batch_size", "500"), ("dry_run", "true"), ("rate", "0.25")],
+        [("batch_size", "500"), ("dry_run", "true"), ("rate", "0.25"),
+         ("audit", "No"), ("verbose", "maybe")],
         "name string, value string",
     )
     s = load_settings(df)
     assert setting_as(s, "batch_size", int) == 500
     assert setting_as(s, "dry_run", bool) is True
+    assert setting_as(s, "audit", bool) is False
     assert setting_as(s, "rate", float) == 0.25
     assert setting_as(s, "absent", int, default=7) == 7
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="does not parse"):
         setting_as(s, "dry_run", int)
+    with _pytest.raises(ValueError, match="is not a boolean"):
+        setting_as(s, "verbose", bool)

@@ -33,7 +33,10 @@ def test_entry_points_expose_every_query_in_registry_order():
     assert list(e.oracle_sql()) == names
 
 
-def test_query_decorator_registers_a_wrapper_and_returns_the_fn():
+def test_query_decorator_registers_and_returns_the_fn():
+    """The registry holds the query function itself: every query reads
+    through ``catalog.load_table``, which tunes the session, so no
+    wrapper sits between a caller and the function."""
     from etl_work_flow_for_big_data_spark.queries import query
 
     def probe_fn(spark, sf_dir):
@@ -44,8 +47,7 @@ def test_query_decorator_registers_a_wrapper_and_returns_the_fn():
         assert query(name, "SELECT 1", doc="d")(probe_fn) is probe_fn
         spec = REGISTRY[name]
         assert (spec.name, spec.oracle, spec.doc) == (name, "SELECT 1", "d")
-        assert spec.fn is not probe_fn
-        assert (spec.fn.__name__, spec.fn.__doc__) == ("probe_fn", "probe doc")
+        assert spec.fn is probe_fn
         assert list(REGISTRY)[-1] == name
     finally:
         REGISTRY.pop(name, None)

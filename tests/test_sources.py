@@ -505,6 +505,9 @@ def test_kafka_wire_frame_roundtrip(spark):
     assert bytes(row["value"]) == b"s=7\nt=rating\nx=a=b\n"
     back = kafka_packets(wire).collect()[0]
     assert back["s"] == 7 and back["attrs"]["x"] == "a=b"
+    keyless = kafka_wire_frame(df, key_col=None)
+    assert keyless.columns == ["value"]
+    assert bytes(keyless.collect()[0]["value"]) == b"s=7\nt=rating\nx=a=b\n"
 
 
 def test_failed_fetch_leaves_no_partial_file(tmp_path):

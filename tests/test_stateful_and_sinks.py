@@ -259,9 +259,20 @@ def test_progress_logger_emits_log_packets(spark, tmp_path):
 def test_kv_text_write_newline_in_value_fails(spark, tmp_path):
     """A raw newline inside a value would silently split into bogus
     entries after the separator translate — caught in-row like the
-    separator clash."""
+    separator clash. A NULL value has no spelling on the wire (its
+    entry used to vanish): both writers fail it in-row too, naming
+    only its key."""
+    from etl_work_flow_for_big_data_spark.sources.registry import kafka_wire_frame
+
     bad = spark.createDataFrame(
         [({"s": "has\nnewline"},)], "attrs map<string,string>"
     )
     with pytest.raises(Exception, match="newline"):
         write_kv_text(bad, str(tmp_path / "bad"))
+    null_value = spark.createDataFrame(
+        [({"s": "1", "t": "rating", "v": None},)], "attrs map<string,string>"
+    )
+    with pytest.raises(Exception, match="NULL.*offending keys: v[^,]"):
+        write_kv_text(null_value, str(tmp_path / "null"))
+    with pytest.raises(Exception, match="NULL.*offending keys: v[^,]"):
+        kafka_wire_frame(null_value).collect()
